@@ -15,7 +15,7 @@ long-running 100 TB job amortizes to zero.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] (default 32)
+  SPARK_GRAFT_CPUS     local[N] (default: this machine's core count)
   SPARK_GRAFT_CRAWL_N  synthetic pages-table size (default 100000)
 """
 
@@ -120,11 +120,12 @@ def full_round_throughput(spark, n_seeds: int) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     crawl_n = int(os.environ.get("SPARK_GRAFT_CRAWL_N", "100000"))
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from python_web_scraper_cleaner_spark.plans.queries import registry
     from python_web_scraper_cleaner_spark.session import (
-        build_session, tune_for_binary_scan)
+        build_session, local_defaults, tune_for_binary_scan)
+
+    cores = int(local_defaults()[0])
 
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")

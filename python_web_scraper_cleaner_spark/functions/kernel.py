@@ -860,41 +860,12 @@ def parse_robots_txt(text: Optional[str], user_agent: str = "*") -> dict:
     return result
 
 
-def _prefix_form(pattern: str, *, is_allow: bool) -> Optional[str]:
-    """Conservative prefix reduction of a robots path pattern for the
-    PREFIX matcher: rules containing RFC 9309 metacharacters cannot be
-    prefix-matched literally (a literal '/private*' never startswith-
-    matches '/private/x' — the rule would silently never apply, a
-    compliance violation). Disallow rules truncate at the first '*'
-    (with a trailing '$' stripped) — over-blocking, never under-
-    blocking; Allow rules with metacharacters are dropped — never
-    under-blocking either. Full §2.2.3 wildcard semantics live on the
-    wildcard path (robots_wildcard_decision / apply_robots_wildcard,
-    the engine's robots_wildcard=True mode)."""
-    has_meta = "*" in pattern or pattern.endswith("$")
-    if not has_meta:
-        return pattern
-    if is_allow:
-        return None
-    body = pattern[:-1] if pattern.endswith("$") else pattern
-    return body.split("*", 1)[0]
-
-
 def robots_allows(path: str, rules: dict) -> bool:
-    """Longest-match allow/disallow decision (RFC 9309 §2.2.2): the most
-    specific matching prefix wins; ties go to Allow; no match → allowed.
-    Metacharacter rules are reduced conservatively (see _prefix_form) —
-    the wildcard twin robots_wildcard_decision carries their exact
-    semantics."""
-    allow = [q for p in rules.get("allow_prefixes", ())
-             if (q := _prefix_form(p, is_allow=True)) is not None]
-    dis = [q for p in rules.get("disallow_prefixes", ())
-           if (q := _prefix_form(p, is_allow=False)) is not None]
-    best_allow = max((len(p) for p in allow if path.startswith(p)),
-                     default=-1)
-    best_dis = max((len(p) for p in dis if path.startswith(p)),
-                   default=-1)
-    return best_allow >= best_dis
+    """RFC 9309 §2.2.2 decision over a parse_robots_txt rules dict (the
+    most specific matching rule wins; ties go to Allow; no match →
+    allowed) — robots_wildcard_decision on its prefix lists."""
+    return robots_wildcard_decision(path, rules.get("allow_prefixes", ()),
+                                    rules.get("disallow_prefixes", ()))[0]
 
 
 def robots_pattern_regex(pattern: str) -> str:
@@ -918,7 +889,7 @@ def robots_wildcard_decision(path: str, allow_patterns, disallow_patterns):
     rule with the most octets (raw pattern length) wins; an Allow and a
     Disallow of equal length go to Allow; no matching rule → allowed.
     Returns (allowed: bool, decisive_len: int) with decisive_len = -1 when
-    nothing matched — the pure twin of apply_robots_wildcard."""
+    nothing matched — the pure twin of operators/frontier.apply_robots."""
     best_allow = max((len(p) for p in allow_patterns
                       if re.match(robots_pattern_regex(p), path)),
                      default=-1)

@@ -54,50 +54,6 @@ def parse_robots_table(robots_txt: DataFrame, *, host_col: str = "host",
             .select(F.col(host_col).alias("host"), "_rules.*"))
 
 
-def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """Filter URLs by RFC 9309 longest-match allow/disallow: the longest
-    matching prefix wins, ties go to Allow, hosts without rules pass.
-    robots(host, crawl_delay_ms, disallow_prefixes, [allow_prefixes]) is
-    per-host tiny → broadcast (reference analog: invariant hoisting,
-    api/main.py:47-48); the match itself is JVM array expressions (codegen,
-    no UDF on the 10^10-row side)."""
-    path = F.regexp_extract(F.col("canonical_url"),
-                            r"^[a-z][a-z0-9+.-]*://[^/]*(/.*)$", 1)
-    if "allow_prefixes" not in robots.columns:
-        robots = robots.withColumn("allow_prefixes",
-                                   F.array().cast("array<string>"))
-    j = frontier.join(F.broadcast(robots), "host", "left")
-
-    # conservative reduction of RFC 9309 metacharacter rules for the
-    # prefix matcher (kernel._prefix_form twin): a literal '/private*'
-    # never startswith-matches, so the rule would silently not apply —
-    # disallow rules truncate at the first '*' ('$' stripped):
-    # over-blocks, never under-blocks; allow rules with metacharacters
-    # drop. Exact wildcard semantics: apply_robots_wildcard.
-    def _dis_form(p):
-        return F.substring_index(
-            F.regexp_replace(p, r"\$$", ""), "*", 1)
-
-    def longest_match(col):
-        return F.coalesce(
-            F.array_max(F.transform(
-                F.filter(F.coalesce(col, F.array()),
-                         lambda p: F.startswith(path, p)),
-                F.length)),
-            F.lit(-1))
-
-    allow_pats = F.filter(
-        F.coalesce(F.col("allow_prefixes"), F.array()),
-        lambda p: ~p.contains("*") & ~p.endswith("$"))
-    dis_pats = F.transform(
-        F.coalesce(F.col("disallow_prefixes"), F.array()), _dis_form)
-    allowed = longest_match(allow_pats) >= longest_match(dis_pats)
-    return (j.withColumn("crawl_delay_ms",
-                         F.coalesce(F.col("crawl_delay_ms"), F.lit(0)))
-            .filter(allowed)
-            .drop("disallow_prefixes", "allow_prefixes"))
-
-
 def robots_pattern_regex_col(pattern):
     """JVM-expression twin of kernel.robots_pattern_regex: RFC 9309 path
     pattern → anchored regex, built with regexp_replace/concat so the
@@ -115,76 +71,75 @@ def robots_pattern_regex_col(pattern):
                     F.when(anchored, F.lit("$")).otherwise(F.lit("")))
 
 
-def apply_robots_wildcard(frontier: DataFrame, robots: DataFrame,
-                          *, keep_decision: bool = False) -> DataFrame:
-    """Full RFC 9309 §2.2.3 matching: patterns may contain ``*`` (any run)
-    and a trailing ``$`` (end anchor); the matching rule with the most
-    octets wins, equal-length ties go to Allow, no match → allowed
-    (§2.2.2).  Superset of apply_robots, which handles the prefix-only
-    subset with pure startswith.
+def apply_robots(frontier: DataFrame, robots: DataFrame,
+                 *, keep_decision: bool = False) -> DataFrame:
+    """RFC 9309 §2.2.2 allow/disallow filtering: patterns may contain
+    ``*`` (any run) and a trailing ``$`` (end anchor); the matching rule
+    with the most octets wins, equal-length ties go to Allow, no match
+    (or no rules for the host) → allowed.  Kernel twin:
+    robots_wildcard_decision.
 
-    Scale shape: robots(host, allow_patterns, disallow_patterns) is
-    per-host tiny → pattern→regex translation happens ONCE there (JVM
-    expressions, robots_pattern_regex_col) and the result broadcasts; the
-    10^10-row frontier evaluates regexp_like per (url, rule) inside
-    codegen — no Python anywhere.  regexp_like with a column pattern
-    recompiles per row; real deployments with >~100 rules/host should
-    pre-compile by pivoting hot rules into literal columns, noted in
-    PLANS_AUDIT.  Reference analog: the reference never checks robots at
-    all (scripts/news.py fetches unconditionally); this is the productionized
-    J3 surface (SURVEY §2.4).
+    Scale shape: robots is per-host tiny → broadcast (reference analog:
+    invariant hoisting, api/main.py:47-48).  Pattern→regex translation
+    happens ONCE there (robots_pattern_regex_col), and only for rules
+    carrying a metacharacter; a plain prefix rule keeps the cheap
+    ``startswith``.  The 10^10-row frontier evaluates the match per
+    (url, rule) inside codegen — no Python anywhere.  regexp_like with a
+    column pattern recompiles per row; real deployments with >~100
+    metacharacter rules/host should pre-compile by pivoting hot rules
+    into literal columns, noted in PLANS_AUDIT.
 
-    ``keep_decision=True`` keeps ``robots_allowed`` and ``decisive_len``
-    (octet length of the winning rule, -1 = no rule matched) instead of
-    filtering — the audit shape.
-
-    Accepts either (allow_patterns, disallow_patterns) columns or the
-    parse_robots_table names (allow_prefixes, disallow_prefixes) — a
-    plain prefix IS a valid RFC pattern, so the engine can switch matcher
-    without reparsing.  A ``crawl_delay_ms`` column, when present, is
-    carried through (null → 0) exactly like apply_robots.
-    """
+    Accepts the parse_robots_table names (allow_prefixes,
+    disallow_prefixes) or (allow_patterns, disallow_patterns); a missing
+    allow column means no Allow rules.  A ``crawl_delay_ms`` column, when
+    present, is carried through with null → 0; other robots columns pass
+    through.  ``keep_decision=True`` keeps ``robots_allowed`` and
+    ``decisive_len`` (octet length of the winning rule, -1 = no rule
+    matched) instead of filtering — the audit shape."""
     robots = (robots
-              .withColumnRenamed("allow_prefixes", "allow_patterns")
-              .withColumnRenamed("disallow_prefixes", "disallow_patterns"))
-    for c in ("allow_patterns", "disallow_patterns"):
+              .withColumnRenamed("allow_patterns", "allow_prefixes")
+              .withColumnRenamed("disallow_patterns", "disallow_prefixes"))
+    for c in ("allow_prefixes", "disallow_prefixes"):
         if c not in robots.columns:   # e.g. ROBOTS_SCHEMA has no allows
             robots = robots.withColumn(c, F.array().cast("array<string>"))
-    path = F.regexp_extract(F.col("canonical_url"),
-                            r"^[a-z][a-z0-9+.-]*://[^/]*(/.*)$", 1)
-    to_rules = lambda col: F.transform(
-        F.coalesce(col, F.array().cast("array<string>")),
-        lambda p: F.struct(p.alias("pattern"),
-                           robots_pattern_regex_col(p).alias("rx")))
-    has_delay = "crawl_delay_ms" in robots.columns
-    robots = robots.select(
-        "host",
-        *(["crawl_delay_ms"] if has_delay else []),
-        to_rules(F.col("allow_patterns")).alias("_allow_rules"),
-        to_rules(F.col("disallow_patterns")).alias("_dis_rules"))
+
+    def to_rules(col):
+        # rx stays NULL for a plain prefix rule: startswith decides it
+        return F.transform(
+            F.coalesce(col, F.array().cast("array<string>")),
+            lambda p: F.struct(
+                p.alias("pattern"),
+                F.when(p.contains("*") | p.endswith("$"),
+                       robots_pattern_regex_col(p)).alias("rx")))
+
+    robots = (robots
+              .withColumn("_allow_rules", to_rules(F.col("allow_prefixes")))
+              .withColumn("_dis_rules", to_rules(F.col("disallow_prefixes")))
+              .drop("allow_prefixes", "disallow_prefixes"))
     j = frontier.join(F.broadcast(robots), "host", "left")
-    if has_delay:
+    if "crawl_delay_ms" in robots.columns:
         j = j.withColumn("crawl_delay_ms",
                          F.coalesce(F.col("crawl_delay_ms"), F.lit(0)))
+    path = F.regexp_extract(F.col("canonical_url"),
+                            r"^[a-z][a-z0-9+.-]*://[^/]*(/.*)$", 1)
 
     def best(col):
         return F.coalesce(
             F.array_max(F.transform(
                 F.filter(F.coalesce(col, F.array().cast(
                     "array<struct<pattern:string,rx:string>>")),
-                    lambda s: F.regexp_like(path, s["rx"])),
+                    lambda s: F.when(s["rx"].isNull(),
+                                     F.startswith(path, s["pattern"]))
+                    .otherwise(F.regexp_like(path, s["rx"]))),
                 lambda s: F.length(s["pattern"]))),
             F.lit(-1))
 
     ba, bd = best(F.col("_allow_rules")), best(F.col("_dis_rules"))
-    out = (j.withColumn("robots_allowed", ba >= bd)
-           .withColumn("decisive_len",
-                       F.greatest(ba, bd).cast("long"))
-           .drop("_allow_rules", "_dis_rules"))
-    if keep_decision:
-        return out
-    return (out.filter(F.col("robots_allowed"))
-            .drop("robots_allowed", "decisive_len"))
+    if not keep_decision:
+        return j.filter(ba >= bd).drop("_allow_rules", "_dis_rules")
+    return (j.withColumn("robots_allowed", ba >= bd)
+            .withColumn("decisive_len", F.greatest(ba, bd).cast("long"))
+            .drop("_allow_rules", "_dis_rules"))
 
 
 def order_exprs(order_cols=None) -> list:
@@ -942,7 +897,7 @@ def extract_directives(pages: DataFrame, *, url_col: str = "url",
     """Page-level crawl directives: meta-robots ``noindex``/``nofollow``
     and the ``rel=canonical`` target, extracted from raw HTML.
 
-    The robots.txt layer (apply_robots / apply_robots_wildcard) gates
+    The robots.txt layer (apply_robots) gates
     fetching per host-path; these are the PER-PAGE directives a crawler
     honors after the fetch (Googlebot/Heritrix semantics): ``noindex``
     keeps the page out of the corpus/index while its links may still be

@@ -81,9 +81,11 @@ def projection_bucket(vec: Column, *, n_planes: int = 4, dims: int = 64) -> Colu
     would null-pad, every projection would aggregate to NULL, and every
     row would silently land in bucket 0 — turning the bucketed join
     into an unbucketed quadratic scan (and collapsing recall to ~zero
-    for mixed-width query/corpus pairs) with no error raised."""
-    vec = F.when(
-        F.size(vec) == dims, vec).otherwise(F.raise_error(F.concat(
+    for mixed-width query/corpus pairs) with no error raised. A NULL
+    vector (a missing embedding) has no bucket: it yields NULL."""
+    checked = F.when(
+        vec.isNull() | (F.size(vec) == dims), vec).otherwise(
+        F.raise_error(F.concat(
             F.lit("projection_bucket: vector length "),
             F.size(vec).cast("string"),
             F.lit(f" != dims={dims} — pass dims= matching the "
@@ -92,7 +94,7 @@ def projection_bucket(vec: Column, *, n_planes: int = 4, dims: int = 64) -> Colu
     for p in range(n_planes):
         proj = F.aggregate(
             F.zip_with(
-                vec.cast("array<double>"),
+                checked.cast("array<double>"),
                 F.transform(
                     F.sequence(F.lit(1), F.lit(dims)),
                     lambda d: (((d.cast("long") * 2654435761
@@ -101,7 +103,7 @@ def projection_bucket(vec: Column, *, n_planes: int = 4, dims: int = 64) -> Colu
                 lambda x, w: x * w.cast("double")),
             F.lit(0.0), lambda acc, v: acc + v)
         bucket = bucket + F.when(proj >= 0, F.lit(2 ** p)).otherwise(F.lit(0))
-    return bucket
+    return F.when(vec.isNotNull(), bucket)
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, *, k: int = 3,

@@ -21,12 +21,13 @@ html_cleaner_core.py:run_batch), re-expressed as north_rule demands:
       ──► near-dup probe vs the persisted MinHash signature index (optional,
       dedup_index=True: batch band-probes sig_index, near-dups flagged,
       only kept docs' bands appended — corpus never re-shingled)
-    transactional commits: pages+r, warc_segments+r (optional,
-      archive=True: WARC capture + WET extracted-text twins — the pair
-      of files Common Crawl ships; archive_dedup=True additionally
-      maintains archive_digests+r and writes ISO 28500 revisit stubs
-      instead of already-archived payload bytes), sig_index+r, links+r,
-      url_seen+r, crawl_log+r, frontier−batch
+    transactional commits, in ROUND_COMMITS order: pages+r,
+      warc_segments+r (optional, archive=True: WARC capture + WET
+      extracted-text twins — the pair of files Common Crawl ships;
+      archive_dedup=True additionally maintains archive_digests+r and
+      writes ISO 28500 revisit stubs instead of already-archived payload
+      bytes), sig_index+r, links+r, url_seen+r, retries, bloom,
+      fetch_history+r, frontier−batch, crawl_log+r (the resume marker)
 
 Every table commit is one TableIO snapshot per round, so a killed job
 resumes at the last committed round and — because every ordering derives
@@ -42,6 +43,7 @@ pages table").
 
 from __future__ import annotations
 
+import functools
 import re as _re
 import time
 from typing import Iterator
@@ -95,6 +97,44 @@ _FETCH_EXTRA = [
 ]
 
 _DOCID_RE = _re.compile(r"/(\d+)\.html$")
+
+# Fixed policy values. BLOOM_FPR sizes the bloom filter: a committed
+# store is only usable by an engine with the same filter geometry, so
+# these are constants, not options.
+DISCOVERY_PRIORITY = 9     # discovered links crawl after every seed
+PAGERANK_ITERS = 3         # fixed-point iterations of every rank mode
+DEDUP_THRESHOLD = 0.7      # MinHash Jaccard estimate flagging a near-dup
+C4_MIN_WORDS = 5           # C4 words-per-line floor
+BLOOM_FPR = 0.01
+
+# Tables bootstrap() writes (frontier is rewritten every round too).
+BOOTSTRAP_TABLES = ("frontier", "robots", "seed_set")
+
+# A round's commit set, in commit order: (table, mode). The one replay
+# guard: an "append" is skipped when the table already carries the round
+# (appending again would duplicate rows); an "overwrite" always re-runs,
+# being a pure function of committed state and the round's pages.
+# pages commits FIRST — it is the round's write-ahead record, so a crash
+# anywhere later replays from it. crawl_log is the RESUME MARKER
+# (last_round() keys on it), so it commits LAST: every earlier crash
+# window leaves crawl_log behind and run() re-enters the round's replay
+# path. Were the marker committed before the frontier advance, a crash in
+# between would be unreplayable — resume would skip past the round,
+# losing its discovered links and leaving its fetched urls in the
+# frontier forever.
+ROUND_COMMITS = (
+    ("pages", "append"),
+    ("warc_segments", "append"),
+    ("archive_digests", "append"),
+    ("sig_index", "append"),
+    ("links", "append"),
+    ("url_seen", "append"),
+    ("retries", "overwrite"),
+    ("bloom", "overwrite"),
+    ("fetch_history", "append"),
+    ("frontier", "overwrite"),
+    ("crawl_log", "append"),
+)
 
 
 def synthesize_seeds(spark: SparkSession, n: int) -> DataFrame:
@@ -209,33 +249,25 @@ class CrawlEngine:
                  per_host_budget: int = 5,
                  n_bloom_buckets: int = 16,
                  bloom_capacity_per_bucket: int = 100_000,
-                 bloom_fpr: float = 0.01,
                  hot_host_threshold: int | None = None,
                  n_salts: int = 8,
                  discover_links: bool = False,
-                 discovery_priority: int = 9,
                  priority_mode: str = "static",
-                 pagerank_iters: int = 3,
                  rank_refresh_every: int = 1,
                  dedup_index: bool = False,
-                 dedup_threshold: float = 0.7,
                  archive: bool = False,
                  archive_pages_per_segment: int = 50,
-                 archive_gzip: bool = True,
                  archive_dedup: bool = False,
                  revisit: bool = False,
-                 revisit_base_hours: int = 1,
                  trap_variant_cap: int | None = None,
                  adaptive_delay: bool = False,
                  round_ms: int | None = None,
-                 robots_wildcard: bool = False,
                  retry_failed: bool = False,
                  max_attempts: int = 3,
                  retry_backoff_rounds: int = 1,
                  url_filter: bool = False,
                  strip_tracking: bool = False,
                  c4_filter: bool = False,
-                 c4_min_words: int = 5,
                  c4_min_sentences: int = 3,
                  honor_directives: bool = False) -> None:
         self.spark = spark
@@ -247,7 +279,7 @@ class CrawlEngine:
         # every delta to share (m_bits, n_hashes). Size n_bloom_buckets ×
         # bloom_capacity_per_bucket for the deployment's total URL volume
         # (10^10 URLs: B=16384 at the default per-bucket capacity).
-        self._bloom_m = B.optimal_m_bits(bloom_capacity_per_bucket, bloom_fpr)
+        self._bloom_m = B.optimal_m_bits(bloom_capacity_per_bucket, BLOOM_FPR)
         self._bloom_k = B.optimal_k(self._bloom_m, bloom_capacity_per_bucket)
         self.hot_host_threshold = hot_host_threshold
         self.n_salts = n_salts
@@ -257,7 +289,6 @@ class CrawlEngine:
         # this a crawler rather than a fetch queue). Discovered URLs get
         # the lowest priority so seeds always crawl first — deterministic.
         self.discover_links = discover_links
-        self.discovery_priority = discovery_priority
         # Dynamic frontier priority (VERDICT r4 #1): the rank modes
         # replace the static seed `priority` ordering with the composed
         # frontier_priority decision (plans/queries.q_frontier_priority,
@@ -279,12 +310,11 @@ class CrawlEngine:
         #                 order itself.
         # Everything derives from committed tables, so kill/resume still
         # replays the identical order (north_rule invariant).
-        # pagerank_iters is the iteration/round knob for ALL rank modes.
+        # PAGERANK_ITERS is the iteration count for ALL rank modes.
         if priority_mode not in ("static", "pagerank", "opic", "trustrank"):
             raise ValueError(f"unknown priority_mode {priority_mode!r}")
         self.priority_mode = priority_mode
         self._rank_mode = priority_mode != "static"
-        self.pagerank_iters = pagerank_iters
         # Rank refresh cadence: round r ranks over the links committed
         # BEFORE basis = r - (r % K). At 10^10 urls re-ranking the whole
         # accumulated graph every round is the dominant scheduler cost;
@@ -305,18 +335,16 @@ class CrawlEngine:
         # docs' bands — the corpus is never re-shingled. Fixed signature
         # geometry per store, same contract as the bloom filter.
         self.dedup_index = dedup_index
-        self.dedup_threshold = dedup_threshold
         self._sig_k, self._sig_hashes, self._sig_band = 3, 16, 4
         # Archival sink: commit each round's captures as WARC segments
         # plus their WET (extracted-text conversion) twins — the exact
         # pair of files Common Crawl ships — in the same transactional
         # commit set as the round's tables (sources/warc.py writers,
-        # gzip-member framing by default, the real CC layout).
+        # gzip-member framing, the real CC layout).
         self.archive = archive
         if archive_pages_per_segment < 1:
             raise ValueError("archive_pages_per_segment must be >= 1")
         self.archive_pages_per_segment = archive_pages_per_segment
-        self.archive_gzip = archive_gzip
         # Archival payload dedup (ISO 28500 §6.7.2, what Common Crawl
         # does at write time): maintain an `archive_digests` table of
         # every payload digest ever archived; a re-capture whose digest
@@ -333,9 +361,8 @@ class CrawlEngine:
         # the substrate _apply_priority's due-ness ordering and
         # schedule_revisits' Cho–G-M backoff consume). The engine's time
         # axis is the round id: 1 round == 1 "hour" of the backoff
-        # schedule (revisit_base_hours scales it).
+        # schedule.
         self.revisit = revisit
-        self.revisit_base_hours = revisit_base_hours
         # Crawler-trap guard: at most N pending urls per (host, path)
         # enter a round; the overflow is DROPPED from the frontier (the
         # enforcement half of operators/frontier.url_trap_signals /
@@ -357,15 +384,6 @@ class CrawlEngine:
         if round_ms is not None and round_ms < 1:
             raise ValueError("round_ms must be >= 1")
         self.round_ms = round_ms
-        # Robots matcher mode: wildcard=True runs the full RFC 9309
-        # §2.2.3 pattern grammar (operators/frontier.apply_robots_
-        # wildcard — '*' and trailing-'$' honoured, longest-octets wins)
-        # instead of the prefix subset. A plain prefix is a valid
-        # pattern, so both matchers agree on prefix-only rule tables;
-        # the mode only changes behavior when the robots table actually
-        # carries metacharacter rules. Pure function of the committed
-        # robots table either way → replay/resume stay byte-identical.
-        self.robots_wildcard = robots_wildcard
         # Transient-failure retry: retry_failed=True stops treating a
         # failed fetch as permanent. Failed urls stay OUT of url_seen and
         # IN the frontier while attempts remain; a `retries` table
@@ -410,7 +428,6 @@ class CrawlEngine:
         # projection of the extracted text, so replay/resume stay
         # byte-identical.
         self.c4_filter = c4_filter
-        self.c4_min_words = c4_min_words
         self.c4_min_sentences = c4_min_sentences
         # Per-page crawl directives (operators/frontier.meta_robots_flags
         # — the extract_directives expressions): each round stamps
@@ -486,33 +503,25 @@ class CrawlEngine:
             robots = FR.parse_robots_table(robots_txt)
         if seeds is None and sitemap_docs is None and feed_docs is None:
             raise ValueError("pass seeds and/or sitemap_docs/feed_docs")
-        if sitemap_docs is not None:
-            parsed = FR.parse_sitemaps(sitemap_docs)
-            sm_seeds = parsed.select(
+        for docs, parse, prio, ts_col in (
+                (sitemap_docs, FR.parse_sitemaps, sitemap_priority,
+                 "lastmod"),
+                (feed_docs, FR.parse_feeds, feed_priority, "published")):
+            if docs is None:
+                continue
+            doc_seeds = parse(docs).select(
                 "url",
-                F.lit(int(sitemap_priority)).alias("priority"),
+                F.lit(int(prio)).alias("priority"),
                 F.coalesce(
-                    # try_: a malformed <lastmod> in one wild sitemap must
+                    # try_: a malformed date in one wild document must
                     # degrade to the epoch default, not ANSI-abort the job
-                    F.try_to_timestamp(F.when(F.col("lastmod") != "",
-                                              F.col("lastmod"))),
+                    F.try_to_timestamp(F.when(F.col(ts_col) != "",
+                                              F.col(ts_col))),
                     F.to_timestamp(F.lit("1970-01-01")),
                 ).alias("discovered_ts"))
-            seeds = (sm_seeds if seeds is None
+            seeds = (doc_seeds if seeds is None
                      else seeds.select("url", "priority", "discovered_ts")
-                     .unionByName(sm_seeds))
-        if feed_docs is not None:
-            fd_seeds = FR.parse_feeds(feed_docs).select(
-                "url",
-                F.lit(int(feed_priority)).alias("priority"),
-                F.coalesce(
-                    F.try_to_timestamp(F.when(F.col("published") != "",
-                                              F.col("published"))),
-                    F.to_timestamp(F.lit("1970-01-01")),
-                ).alias("discovered_ts"))
-            seeds = (fd_seeds if seeds is None
-                     else seeds.select("url", "priority", "discovered_ts")
-                     .unionByName(fd_seeds))
+                     .unionByName(doc_seeds))
         frontier = self._ingest_gate(
             canonicalize_seeds(self._strip_tracking(seeds)))
         self.io.overwrite(frontier, "frontier", round_id=-1)
@@ -604,7 +613,7 @@ class CrawlEngine:
         """Dispatch the priority_mode's centrality to (id, rank_fp)."""
         if self.priority_mode == "opic":
             st = G.opic_cash(edges, nodes, n_nodes=n,
-                             rounds=self.pagerank_iters)
+                             rounds=PAGERANK_ITERS)
             # the OPIC importance estimate: accumulated history plus the
             # cash not yet credited (Abiteboul's h+c estimator)
             return st.select(
@@ -625,10 +634,10 @@ class CrawlEngine:
                     "id", F.lit(0).cast("long").alias("rank_fp"))
             return (G.trustrank_fixed_point(
                 edges, seeds, nodes, n_seeds=ns,
-                iters=self.pagerank_iters)
+                iters=PAGERANK_ITERS)
                 .select("id", F.col("trust_fp").alias("rank_fp")))
         return G.pagerank_fixed_point(edges, nodes, n_nodes=n,
-                                      iters=self.pagerank_iters)
+                                      iters=PAGERANK_ITERS)
 
     def _apply_priority(self, allowed: DataFrame, round_id: int):
         """Compose the round's dynamic fetch ordering (any rank mode):
@@ -664,12 +673,9 @@ class CrawlEngine:
         else:
             allowed = allowed.withColumn("rank_fp", F.lit(0).cast("long"))
         if io.exists("fetch_history"):
-            # SAME backoff clock as schedule_revisits — a configured
-            # revisit_base_hours must drive the due-ness ordering too,
-            # or the fetch order diverges from the schedule it claims
-            # to compose
-            rev = FR.revisit_schedule(io.read("fetch_history"),
-                                      base_hours=self.revisit_base_hours)
+            # SAME backoff clock as schedule_revisits, or the fetch order
+            # diverges from the schedule it claims to compose
+            rev = FR.revisit_schedule(io.read("fetch_history"))
             allowed = allowed.join(
                 rev.select(F.col("page_id").alias("url_hash"),
                            F.col("next_interval_hours").alias("_due_h")),
@@ -753,7 +759,7 @@ class CrawlEngine:
             index_bands, index_docs.select("url_hash", "text"), new_docs,
             id_col="url_hash", text_col="text", k=self._sig_k,
             n_hashes=self._sig_hashes, band_size=self._sig_band,
-            threshold=self.dedup_threshold)
+            threshold=DEDUP_THRESHOLD)
         dup_ids = (pairs.select(F.col("id_b").alias("url_hash"))
                    .distinct().withColumn("_nd", F.lit(True)))
         return (pages.join(dup_ids, "url_hash", "left")
@@ -847,7 +853,6 @@ class CrawlEngine:
                                     gzip_member)
 
         pps = self.archive_pages_per_segment
-        frame = gzip_member if self.archive_gzip else (lambda b: b)
         src = (pages.filter("fetch_ok")
                .withColumn("seg_block",
                            (F.col("fetch_slot") / pps).cast("int"))
@@ -867,23 +872,23 @@ class CrawlEngine:
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("fetch_slot").reset_index(drop=True)
             host, block = pdf["host"][0], int(pdf["seg_block"][0])
-            warc_parts = [frame(build_warcinfo(block))]
-            wet_parts = [frame(build_warcinfo(block))]
+            warc_parts = [gzip_member(build_warcinfo(block))]
+            wet_parts = [gzip_member(build_warcinfo(block))]
             n_warc = n_wet = n_revisit = 0
             for row in pdf.itertuples():
                 if row.record_type == "revisit":
-                    warc_parts.append(frame(build_revisit_record(
+                    warc_parts.append(gzip_member(build_revisit_record(
                         row.url, row.ts, row.refers_to_url,
                         row.refers_to_ts, row.digest)))
                     n_revisit += 1
                 else:
                     m = _DOCID_RE.search(row.url)
                     html = page_record(int(m.group(1)))["html"]
-                    warc_parts.append(frame(
+                    warc_parts.append(gzip_member(
                         build_warc_record(row.url, row.ts, html)))
                     n_warc += 1
                 if row.ok:
-                    wet_parts.append(frame(
+                    wet_parts.append(gzip_member(
                         build_wet_record(row.url, row.ts, row.text)))
                     n_wet += 1
             return pd.DataFrame(
@@ -970,7 +975,7 @@ class CrawlEngine:
         if not io.exists("fetch_history"):
             return 0
         fh = io.read("fetch_history")
-        rev = FR.revisit_schedule(fh, base_hours=self.revisit_base_hours)
+        rev = FR.revisit_schedule(fh)
         last = fh.groupBy("page_id").agg(F.max("ts").alias("_last_ts"))
         due = (rev.join(last, "page_id")
                .filter(F.col("_last_ts") + F.col("next_interval_hours")
@@ -1023,8 +1028,331 @@ class CrawlEngine:
         """True when ``name`` already carries this round's commit (replay
         must skip it — an append-again would duplicate rows). >= not ==:
         a table can be AHEAD of a replayed round in rolled-back stores."""
-        return (self.io.exists(name)
-                and (self.io.latest_round(name) or -1) >= round_id)
+        r = self.io.latest_round(name)
+        return r is not None and r >= round_id
+
+    def _fetch_round(self, pending: DataFrame, seen: DataFrame, bloom,
+                     retries, round_id: int) -> tuple:
+        """Select, fetch and extract this round's batch: (pages frame,
+        signature-index repair bands | None)."""
+        io = self.io
+        sig_repair = None
+        if bloom is not None:
+            fresh = B.bloom_dedup(pending, seen, bloom,
+                                  n_buckets=self.n_bloom_buckets)
+        else:
+            fresh = pending
+        if self.retry_failed:
+            # retry gate: join per-url attempt state; urls whose
+            # backoff window is still open sit this round out (they
+            # stay in the frontier — only selection skips them).
+            # 8-byte-key left join with a small build side.
+            fresh = (fresh.join(retries, "url_hash", "left")
+                     .withColumn("attempt",
+                                 F.coalesce(F.col("attempt"), F.lit(0)))
+                     .filter(F.col("due_round").isNull()
+                             | (F.col("due_round") <= F.lit(round_id)))
+                     .drop("due_round"))
+
+        # J3 + O4: robots filter, dynamic priority (pagerank mode),
+        # per-host budget, politeness schedule
+        allowed = FR.apply_robots(fresh, io.read("robots"))
+        if self.adaptive_delay and io.exists("pages"):
+            # observed-latency backoff: raise each host's effective
+            # delay to max(robots, 1.5 × p95 observed). Derived from
+            # committed pages only (prior rounds) via the pure
+            # latency function — replay-safe with no new table. The
+            # estimate is host-cardinality → broadcast.
+            hist = (io.read("pages")
+                    .select("host", _observed_latency_ms(
+                        F.col("url_hash"), F.col("host"))
+                        .alias("latency_ms")))
+            est = FR.estimate_crawl_delays(hist).select(
+                "host", F.col("delay_ms").alias("_obs_delay_ms"))
+            allowed = (allowed
+                       .join(F.broadcast(est), "host", "left")
+                       .withColumn(
+                           "crawl_delay_ms",
+                           F.greatest(
+                               F.coalesce(F.col("crawl_delay_ms"),
+                                          F.lit(0)).cast("long"),
+                               F.coalesce(F.col("_obs_delay_ms"),
+                                          F.lit(0)).cast("long")))
+                       .drop("_obs_delay_ms"))
+        allowed, order_cols, rank_helper_cols = self._apply_priority(
+            allowed, round_id)
+        batch = FR.select_round_batch(
+            allowed, per_host_budget=self.per_host_budget,
+            hot_host_threshold=self.hot_host_threshold,
+            n_salts=self.n_salts, order_cols=order_cols,
+            round_ms=self.round_ms)
+        if rank_helper_cols:
+            batch = batch.drop(*rank_helper_cols)
+        # batch comes straight from select_round_batch — its
+        # fetch_slot IS the politeness rank, so the second window
+        # shuffle is skipped
+        sched = FR.politeness_schedule(batch, trust_existing_slot=True)
+
+        # S3 + F3: fetch (grouped per host) then vectorized
+        # extraction + deterministic language tagging (input_hint:
+        # extraction fills text AND lang; failed extractions tag
+        # 'und'); in discovery mode out-links are harvested from
+        # html BEFORE the binary column is dropped (links travel as
+        # a small array column, never the blob)
+        from ..functions.udfs import extract_links_udf, lang_id_udf
+        fetched = simulated_fetch(sched)
+        if self.retry_failed:
+            # transient-failure seam: a pure function of (url_hash,
+            # attempt), so attempt n and attempt n+1 are independent
+            # deterministic draws (~12.5% fail) and replay/repeat
+            # runs reproduce the identical outcome. A real fetcher
+            # deletes this expression and reports actual fetch_ok.
+            transient = (F.pmod(F.xxhash64(F.col("url_hash"),
+                                           F.col("attempt")),
+                                F.lit(8)) == 0)
+            fetched = (fetched
+                       .withColumn("fetch_ok",
+                                   F.col("fetch_ok") & ~transient)
+                       .withColumn("html",
+                                   F.when(F.col("fetch_ok"),
+                                          F.col("html"))))
+        extra_cols = []
+        if self.honor_directives:
+            noindex, nofollow = FR.meta_robots_flags(
+                F.col("html").cast("string"))
+            fetched = (fetched.withColumn("noindex", noindex)
+                       .withColumn("nofollow", nofollow))
+            extra_cols += ["noindex", "nofollow"]
+        if self._harvest_links:
+            links = extract_links_udf(F.col("html"), F.col("url"))
+            if self.honor_directives:
+                # nofollow: this page contributes NO discovery edges
+                links = (F.when(F.col("nofollow"),
+                                F.array().cast("array<string>"))
+                         .otherwise(links))
+            fetched = fetched.withColumn("links", links)
+            extra_cols += ["links"]
+        cleaned = with_clean_text(fetched, output_format="txt")
+        pages = (cleaned
+                 .withColumn("lang",
+                             F.when(F.col("ok"),
+                                    lang_id_udf(F.col("text")))
+                             .otherwise(F.lit("und")))
+                 .withColumn("round", F.lit(round_id))
+                 .withColumn("partition_id", F.spark_partition_id())
+                 .select("url", "canonical_url", "url_hash", "host",
+                         "priority", "warc_ts", "round",
+                         "partition_id", "fetch_slot",
+                         "scheduled_offset_ms", "fetch_ok", "text",
+                         "lang", "ok", "extracted_chars", "error",
+                         *extra_cols,
+                         *(["attempt"] if self.retry_failed else [])))
+        if self.c4_filter:
+            from ..operators.textstats import c4_kept_col
+            pages = pages.withColumn(
+                "c4_kept",
+                F.col("ok") & c4_kept_col(
+                    F.col("text"),
+                    min_words_per_line=C4_MIN_WORDS,
+                    min_sentences=self.c4_min_sentences))
+        if self.dedup_index:
+            # localCheckpoint, not persist: the probe + flag + every
+            # commit re-enter this frame, and a plain persist caches
+            # the DATA but not the analyzed plan — each consumer
+            # would re-analyze the whole round lineage (bloom probe
+            # + rank join + windows + Arrow stages; measured ~+10
+            # s/round of pure driver time at a 2.6k-url demo round).
+            # The frame is batch-sized and html is already dropped,
+            # so truncating it to an RDD scan is cheap and every
+            # consumer plans in O(1) of the round plan. (Same
+            # medicine as the round-4 minhash_lsh_probe_index fix —
+            # see BASELINE.md.)
+            pages = pages.localCheckpoint(eager=True)
+            index_bands, sig_repair = self._sig_state()
+            pages = self._flag_near_dups(pages, index_bands)
+        return pages, sig_repair
+
+    def _round_outputs(self, pages: DataFrame, pending: DataFrame, bloom,
+                       retries, sig_repair, replay: bool,
+                       round_id: int) -> dict:
+        """The round's commit set as {table: zero-argument builder}, one
+        per ROUND_COMMITS table these options write. run_round calls a
+        builder right before its commit, so it reads the tables committed
+        before it, and a guarded-off table costs nothing."""
+        io = self.io
+        out = {"pages": lambda: pages}
+        if self.archive:
+            # archival capture: WARC + WET segment blobs (see
+            # _build_segments). With archive_dedup the per-url plan, and
+            # the digest rows it elects, derive from archive_digests
+            # rounds < round_id, so BOTH commits replay identically no
+            # matter where a crash landed between them.
+            plan = None
+            if self.archive_dedup:
+                plan, new_digests = self._archive_plan(pages, round_id)
+                out["archive_digests"] = lambda: new_digests
+            out["warc_segments"] = lambda: self._build_segments(
+                pages, round_id, plan)
+
+        def sig_index():
+            # index maintenance: band ONLY this round's kept docs and
+            # APPEND (operators/dedup.append_to_signature_index
+            # semantics — near-dups never enter the index, the corpus
+            # is never re-shingled); committed AFTER pages with the same
+            # round id so a crash between the two commits is detected as
+            # a round-id gap and repaired by _sig_state.
+            if replay:
+                # _sig_state's gap repair already covers this (committed)
+                # round's kept docs — banding them again here would
+                # duplicate index rows
+                return self._sig_state()[1]
+            from ..operators import dedup as D
+            # fan the batch out before shingling: AQE coalesces the small
+            # round frame to ~1 partition (the checkpointed RDD inherits
+            # it), and the minhash CPU would run on one core otherwise —
+            # measured 33 s → ~3 s on the 7k-url demo round (same fix as
+            # q_dedup_incremental's index build, plans/queries.py)
+            par = self.spark.sparkContext.defaultParallelism
+            kept_new = (self._corpus_view(pages).select("url_hash", "text")
+                        .repartition(par, F.col("url_hash")))
+            bands = D.banded_signatures(
+                kept_new, "url_hash", "text", k=self._sig_k,
+                n_hashes=self._sig_hashes, band_size=self._sig_band)
+            return (bands if sig_repair is None
+                    else sig_repair.unionByName(bands))
+
+        if self.dedup_index:
+            out["sig_index"] = sig_index
+
+        def links():
+            # grow the committed link graph: (fetching page → link
+            # target) as 8-byte hash edges, distinct per round. The NEXT
+            # round's _apply_priority ranks over it.
+            from .queries import _canonicalize as _canon
+            harvested = (pages.filter("fetch_ok")
+                         .select(F.col("url_hash").alias("src_hash"),
+                                 F.explode("links").alias("url")))
+            return (_canon(harvested)
+                    .select("src_hash",
+                            F.xxhash64("canonical_url").alias("dst_hash"))
+                    .distinct()
+                    .withColumn("round", F.lit(round_id).cast("int")))
+
+        if self._rank_mode:
+            out["links"] = links
+
+        # retry mode: a transiently-failed url with attempts left is NOT
+        # done — it stays out of url_seen (and in the frontier) until it
+        # succeeds or exhausts max_attempts. `done` is the membership set
+        # every downstream commit keys on.
+        if self.retry_failed:
+            done = pages.filter(
+                F.col("fetch_ok")
+                | (F.col("attempt") + 1 >= F.lit(self.max_attempts)))
+        else:
+            done = pages
+        new_seen = done.select(
+            "url_hash", "canonical_url",
+            F.lit(round_id).cast("int").alias("first_seen_round"))
+        out["url_seen"] = lambda: new_seen
+
+        @functools.cache
+        def remaining():
+            # frontier advance: only DONE urls leave the pending set (==
+            # all fetched urls outside retry mode) — a retryable failure
+            # stays in the frontier, gated by the retries table at the
+            # next selection
+            rem = pending.join(done.select("canonical_url"),
+                               "canonical_url", "left_anti")
+            if not self.discover_links:
+                return rem
+            # grow the frontier: harvested links − (already seen ∪
+            # already pending). Deterministic: fixed discovery priority,
+            # discovered_ts = this round's id as seconds — same inputs
+            # always yield the same frontier state.
+            discovered = (pages
+                          .select(F.explode("links").alias("url"))
+                          .distinct()
+                          .withColumn("priority",
+                                      F.lit(DISCOVERY_PRIORITY).cast("int"))
+                          .withColumn(
+                              "discovered_ts",
+                              F.to_timestamp(F.lit("2026-06-01"))
+                              + F.make_interval(secs=F.lit(round_id))))
+            fresh = self._ingest_gate(
+                canonicalize_seeds(self._strip_tracking(discovered)))
+            # built AFTER the url_seen commit (it follows url_seen in
+            # ROUND_COMMITS) so this round's done urls are excluded
+            # (TableIO.read pins the snapshot)
+            known_seen = io.read("url_seen").select("canonical_url")
+            fresh = (fresh
+                     .join(known_seen, "canonical_url", "left_anti")
+                     .join(rem.select("canonical_url"),
+                           "canonical_url", "left_anti"))
+            return rem.unionByName(fresh)
+
+        out["frontier"] = remaining
+
+        def merged_retries():
+            # retries' = (old − urls fetched this round) ∪ next attempts,
+            # kept ONLY for urls still in the frontier. Idempotent on
+            # replay: next ⊆ this round's urls, so re-deriving from the
+            # post-crash table lands on the same rows. Backoff is
+            # exponential in attempts consumed: due = round +
+            # backoff·2^attempt. The frontier semi-join purges orphans —
+            # a retryable url later dropped from the frontier (trap-
+            # variant cap) would otherwise hold a retries row forever and
+            # pin run()'s idle-forward loop at max_rounds.
+            nxt = (pages.filter(~F.col("fetch_ok"))
+                   .filter(F.col("attempt") + 1 < F.lit(self.max_attempts))
+                   .select(
+                       "url_hash",
+                       (F.col("attempt") + 1).cast("int").alias("attempt"),
+                       (F.lit(round_id)
+                        + F.lit(self.retry_backoff_rounds)
+                        * F.expr("shiftleft(1, attempt)"))
+                       .cast("int").alias("due_round")))
+            return (retries
+                    .join(pages.select("url_hash"), "url_hash", "left_anti")
+                    .unionByName(nxt)
+                    .join(remaining().select("url_hash"),
+                          "url_hash", "left_semi"))
+
+        if self.retry_failed:
+            out["retries"] = merged_retries
+
+        def merged_bloom():
+            # incremental bloom maintenance: OR in ONLY this round's
+            # hashes (bitmap union is associative — equals a full
+            # rebuild) instead of rescanning url_seen every round.
+            # Committed AFTER url_seen with the same round id; a crash
+            # between the two commits is detected by the round-id
+            # comparison in _bloom and repaired with a one-time full
+            # rebuild. Replay-safe as an overwrite: bitmap OR is
+            # idempotent, and on replay _bloom() already returned either
+            # the in-sync committed filter or a full rebuild over the
+            # post-crash url_seen.
+            delta = B.build_bloom(new_seen.select("url_hash"),
+                                  n_buckets=self.n_bloom_buckets,
+                                  m_bits=self._bloom_m,
+                                  n_hashes=self._bloom_k)
+            return delta if bloom is None else B.merge_blooms(bloom, delta)
+
+        out["bloom"] = merged_bloom
+        if self.revisit:
+            # re-crawl substrate: per-fetch change observations
+            out["fetch_history"] = lambda: self._build_fetch_history(
+                pages, round_id)
+        # K3: per-partition lineage/metrics (manifest analog) — the
+        # resume marker
+        out["crawl_log"] = lambda: (
+            pages.groupBy("round", "partition_id")
+            .agg(F.count("*").alias("n_urls"),
+                 F.sum(F.col("ok").cast("int")).alias("n_ok"),
+                 F.sum((~F.col("ok")).cast("int")).alias("n_err"),
+                 F.sum("extracted_chars").alias("extracted_chars"))
+            .withColumn("wall_ts", F.lit(time.time()).cast("double")))
+        return out
 
     # -- one round -------------------------------------------------------------
     def run_round(self, round_id: int) -> dict:
@@ -1039,12 +1367,13 @@ class CrawlEngine:
             pending, trap_dropped = FR.cap_trap_variants(
                 pending, max_variants=self.trap_variant_cap)
         seen = io.read_or_empty("url_seen", SEEN_SCHEMA)
-        robots = io.read("robots")
 
         # J1: bloom prefilter + exact anti-join against url_seen. The
         # filter is PERSISTED and maintained incrementally (see _bloom):
         # no full url_seen rescan (and no seen.count() action) per round.
         bloom = self._bloom(seen) if io.exists("url_seen") else None
+        retries = (io.read_or_empty("retries", RETRY_SCHEMA)
+                   if self.retry_failed else None)
 
         # WAL-style replay: pages is the round's write-ahead record — it
         # commits FIRST. If a crash interrupted the rest of the commit
@@ -1053,389 +1382,53 @@ class CrawlEngine:
         # pre-round the same urls would be re-fetched and APPENDED TWICE.
         # Rebuild the round frame from the committed rows (they carry
         # every derived column — flags, links, slots) and re-derive only
-        # the outstanding commits, each guarded per table below. All
+        # the outstanding commits under ROUND_COMMITS' guard. All
         # re-derivations are pure functions of committed state, so the
         # healed store is byte-identical to an uninterrupted run
         # (north_rule; tests/test_crawl_engine.py crash-window tests).
         replay = self._committed("pages", round_id)
-        retries = (io.read_or_empty("retries", RETRY_SCHEMA)
-                   if self.retry_failed else None)
         sig_repair = None
         if replay:
             pages = io.read("pages").filter(F.col("round") == round_id)
         else:
-            if bloom is not None:
-                fresh = B.bloom_dedup(pending, seen, bloom,
-                                      n_buckets=self.n_bloom_buckets)
-            else:
-                fresh = pending
-            if self.retry_failed:
-                # retry gate: join per-url attempt state; urls whose
-                # backoff window is still open sit this round out (they
-                # stay in the frontier — only selection skips them).
-                # 8-byte-key left join with a small build side.
-                fresh = (fresh.join(retries, "url_hash", "left")
-                         .withColumn("attempt",
-                                     F.coalesce(F.col("attempt"),
-                                                F.lit(0)))
-                         .filter(F.col("due_round").isNull()
-                                 | (F.col("due_round")
-                                    <= F.lit(round_id)))
-                         .drop("due_round"))
-
-            # J3 + O4: robots filter, dynamic priority (pagerank mode),
-            # per-host budget, politeness schedule
-            allowed = (FR.apply_robots_wildcard(fresh, robots)
-                       if self.robots_wildcard
-                       else FR.apply_robots(fresh, robots))
-            if self.adaptive_delay and io.exists("pages"):
-                # observed-latency backoff: raise each host's effective
-                # delay to max(robots, 1.5 × p95 observed). Derived from
-                # committed pages only (prior rounds) via the pure
-                # latency function — replay-safe with no new table. The
-                # estimate is host-cardinality → broadcast.
-                hist = (io.read("pages")
-                        .select("host", _observed_latency_ms(
-                            F.col("url_hash"), F.col("host"))
-                            .alias("latency_ms")))
-                est = FR.estimate_crawl_delays(hist).select(
-                    "host", F.col("delay_ms").alias("_obs_delay_ms"))
-                allowed = (allowed
-                           .join(F.broadcast(est), "host", "left")
-                           .withColumn(
-                               "crawl_delay_ms",
-                               F.greatest(
-                                   F.coalesce(F.col("crawl_delay_ms"),
-                                              F.lit(0)).cast("long"),
-                                   F.coalesce(F.col("_obs_delay_ms"),
-                                              F.lit(0)).cast("long")))
-                           .drop("_obs_delay_ms"))
-            allowed, order_cols, rank_helper_cols = self._apply_priority(
-                allowed, round_id)
-            batch = FR.select_round_batch(
-                allowed, per_host_budget=self.per_host_budget,
-                hot_host_threshold=self.hot_host_threshold,
-                n_salts=self.n_salts, order_cols=order_cols,
-                round_ms=self.round_ms)
-            if rank_helper_cols:
-                batch = batch.drop(*rank_helper_cols)
-            # batch comes straight from select_round_batch — its
-            # fetch_slot IS the politeness rank, so the second window
-            # shuffle is skipped
-            sched = FR.politeness_schedule(batch, trust_existing_slot=True)
-
-            # S3 + F3: fetch (grouped per host) then vectorized
-            # extraction + deterministic language tagging (input_hint:
-            # extraction fills text AND lang; failed extractions tag
-            # 'und'); in discovery mode out-links are harvested from
-            # html BEFORE the binary column is dropped (links travel as
-            # a small array column, never the blob)
-            from ..functions.udfs import extract_links_udf, lang_id_udf
-            fetched = simulated_fetch(sched)
-            if self.retry_failed:
-                # transient-failure seam: a pure function of (url_hash,
-                # attempt), so attempt n and attempt n+1 are independent
-                # deterministic draws (~12.5% fail) and replay/repeat
-                # runs reproduce the identical outcome. A real fetcher
-                # deletes this expression and reports actual fetch_ok.
-                transient = (F.pmod(F.xxhash64(F.col("url_hash"),
-                                               F.col("attempt")),
-                                    F.lit(8)) == 0)
-                fetched = (fetched
-                           .withColumn("fetch_ok",
-                                       F.col("fetch_ok") & ~transient)
-                           .withColumn("html",
-                                       F.when(F.col("fetch_ok"),
-                                              F.col("html"))))
-            extra_cols = []
-            if self.honor_directives:
-                noindex, nofollow = FR.meta_robots_flags(
-                    F.col("html").cast("string"))
-                fetched = (fetched.withColumn("noindex", noindex)
-                           .withColumn("nofollow", nofollow))
-                extra_cols += ["noindex", "nofollow"]
-            if self._harvest_links:
-                links = extract_links_udf(F.col("html"), F.col("url"))
-                if self.honor_directives:
-                    # nofollow: this page contributes NO discovery edges
-                    links = (F.when(F.col("nofollow"),
-                                    F.array().cast("array<string>"))
-                             .otherwise(links))
-                fetched = fetched.withColumn("links", links)
-                extra_cols += ["links"]
-            cleaned = with_clean_text(fetched, output_format="txt")
-            pages = (cleaned
-                     .withColumn("lang",
-                                 F.when(F.col("ok"),
-                                        lang_id_udf(F.col("text")))
-                                 .otherwise(F.lit("und")))
-                     .withColumn("round", F.lit(round_id))
-                     .withColumn("partition_id", F.spark_partition_id())
-                     .select("url", "canonical_url", "url_hash", "host",
-                             "priority", "warc_ts", "round",
-                             "partition_id", "fetch_slot",
-                             "scheduled_offset_ms", "fetch_ok", "text",
-                             "lang", "ok", "extracted_chars", "error",
-                             *extra_cols,
-                             *(["attempt"] if self.retry_failed else [])))
-            if self.c4_filter:
-                from ..operators.textstats import c4_kept_col
-                pages = pages.withColumn(
-                    "c4_kept",
-                    F.col("ok") & c4_kept_col(
-                        F.col("text"),
-                        min_words_per_line=self.c4_min_words,
-                        min_sentences=self.c4_min_sentences))
-            if self.dedup_index:
-                # localCheckpoint, not persist: the probe + flag + every
-                # commit re-enter this frame, and a plain persist caches
-                # the DATA but not the analyzed plan — each consumer
-                # would re-analyze the whole round lineage (bloom probe
-                # + rank join + windows + Arrow stages; measured ~+10
-                # s/round of pure driver time at a 2.6k-url demo round).
-                # The frame is batch-sized and html is already dropped,
-                # so truncating it to an RDD scan is cheap and every
-                # consumer plans in O(1) of the round plan. (Same
-                # medicine as the round-4 minhash_lsh_probe_index fix —
-                # see BASELINE.md.)
-                pages = pages.localCheckpoint(eager=True)
-                index_bands, sig_repair = self._sig_state()
-                pages = self._flag_near_dups(pages, index_bands)
+            pages, sig_repair = self._fetch_round(pending, seen, bloom,
+                                                  retries, round_id)
         # one shuffle-free pass feeds the commits: cache the round result.
         # persist (NOT localCheckpoint) is deliberate here: the commit
         # consumers re-plan the round lineage, but with the static plan
         # that analysis is cheap, while a checkpointed RDD loses the
         # columnar cache + codegen scan and freezes the AQE-coalesced
         # partitioning — measured 4.4 s → 9.1 s on the 26k-url round.
-        # The dedup branch above checkpoints instead because its probe
-        # re-enters a much deeper plan (see that comment).
+        # The dedup branch of _fetch_round checkpoints instead because
+        # its probe re-enters a much deeper plan (see that comment).
         pages.persist()
         try:
-            n_fetched = pages.count()
+            # every per-page count in one aggregate — the first action,
+            # which also fills the cache the commits read
+            aggs = [F.count("*").alias("n_fetched")]
+            if self.dedup_index:
+                aggs.append(F.count_if("near_dup").alias("n_near_dup"))
+            if self.c4_filter:
+                aggs.append(F.count_if(F.col("ok") & ~F.col("c4_kept"))
+                            .alias("n_c4_dropped"))
+            if self.honor_directives:
+                aggs += [F.count_if("noindex").alias("n_noindex"),
+                         F.count_if("nofollow").alias("n_nofollow")]
+            counts = pages.agg(*aggs).first().asDict()
 
-            if not replay:
-                io.append_round(pages, "pages", round_id)
-
-            if self.archive:
-                # archival capture: WARC + WET segment blobs, a pure
-                # function of the committed pages rows (see
-                # _build_segments) — guarded like every other member of
-                # the commit set, so a crash between the pages and
-                # warc_segments commits replays to identical bytes.
-                # With archive_dedup the per-url plan (and the digest
-                # rows it elects) derives from archive_digests rounds
-                # < round_id, so BOTH commits replay identically no
-                # matter where the crash landed between them.
-                seg_plan = new_digests = None
-                if self.archive_dedup:
-                    seg_plan, new_digests = self._archive_plan(pages,
-                                                               round_id)
-                if not self._committed("warc_segments", round_id):
-                    io.append_round(
-                        self._build_segments(pages, round_id, seg_plan),
-                        "warc_segments", round_id)
-                if (self.archive_dedup
-                        and not self._committed("archive_digests",
-                                                round_id)):
-                    io.append_round(new_digests, "archive_digests",
-                                    round_id)
-
-            if self.dedup_index and not self._committed("sig_index",
-                                                        round_id):
-                # index maintenance: band ONLY this round's kept docs and
-                # APPEND (operators/dedup.append_to_signature_index
-                # semantics — near-dups never enter the index, the corpus
-                # is never re-shingled); committed AFTER pages with the
-                # same round id so a crash between the two commits is
-                # detected as a round-id gap and repaired by _sig_state.
-                if replay:
-                    # _sig_state's gap repair already covers this
-                    # (committed) round's kept docs — banding them again
-                    # here would duplicate index rows
-                    _, new_bands = self._sig_state()
-                else:
-                    from ..operators import dedup as D
-                    # fan the batch out before shingling: AQE coalesces
-                    # the small round frame to ~1 partition (the
-                    # checkpointed RDD inherits it), and the minhash CPU
-                    # would run on one core otherwise — measured 33 s →
-                    # ~3 s on the 7k-url demo round (same fix as
-                    # q_dedup_incremental's index build,
-                    # plans/queries.py)
-                    par = self.spark.sparkContext.defaultParallelism
-                    kept_new = (self._corpus_view(pages)
-                                .select("url_hash", "text")
-                                .repartition(par, F.col("url_hash")))
-                    new_bands = D.banded_signatures(
-                        kept_new, "url_hash", "text", k=self._sig_k,
-                        n_hashes=self._sig_hashes,
-                        band_size=self._sig_band)
-                    if sig_repair is not None:
-                        new_bands = sig_repair.unionByName(new_bands)
-                io.append_round(new_bands, "sig_index", round_id)
-
-            if (self._rank_mode
-                    and not self._committed("links", round_id)):
-                # grow the committed link graph: (fetching page → link
-                # target) as 8-byte hash edges, distinct per round. The
-                # NEXT round's _apply_priority ranks over it — discovery
-                # feeds the ordering, exactly the frontier_priority
-                # composition, now in the production loop.
-                from .queries import _canonicalize as _canon
-                harvested = (pages.filter("fetch_ok")
-                             .select(F.col("url_hash").alias("src_hash"),
-                                     F.explode("links").alias("url")))
-                edges = (_canon(harvested)
-                         .select("src_hash",
-                                 F.xxhash64("canonical_url")
-                                 .alias("dst_hash"))
-                         .distinct()
-                         .withColumn("round", F.lit(round_id)
-                                     .cast("int")))
-                io.append_round(edges, "links", round_id)
-
-            # retry mode: a transiently-failed url with attempts left is
-            # NOT done — it stays out of url_seen (and in the frontier)
-            # until it succeeds or exhausts max_attempts. `done` is the
-            # membership set every downstream commit keys on.
-            if self.retry_failed:
-                done = pages.filter(
-                    F.col("fetch_ok")
-                    | (F.col("attempt") + 1 >= F.lit(self.max_attempts)))
-            else:
-                done = pages
-            new_seen = (done.select(
-                "url_hash", "canonical_url",
-                F.lit(round_id).cast("int").alias("first_seen_round")))
-            if not self._committed("url_seen", round_id):
-                io.append_round(new_seen, "url_seen", round_id)
-
-            # frontier advance (computed here, COMMITTED below after the
-            # state tables): only DONE urls leave the pending set (== all
-            # fetched urls outside retry mode) — a retryable failure
-            # stays in the frontier, gated by the retries table at the
-            # next selection
-            remaining = pending.join(done.select("canonical_url"),
-                                     "canonical_url", "left_anti")
-
-            if self.discover_links:
-                # grow the frontier: harvested links − (already seen ∪
-                # already pending). Deterministic: fixed discovery
-                # priority, discovered_ts = this round's id as seconds —
-                # same inputs always yield the same frontier state.
-                discovered = (pages
-                              .select(F.explode("links").alias("url"))
-                              .distinct()
-                              .withColumn("priority",
-                                          F.lit(self.discovery_priority)
-                                          .cast("int"))
-                              .withColumn(
-                                  "discovered_ts",
-                                  F.to_timestamp(F.lit("2026-06-01"))
-                                  + F.make_interval(secs=F.lit(round_id))))
-                fresh = self._ingest_gate(
-                    canonicalize_seeds(self._strip_tracking(discovered)))
-                # read AFTER the url_seen commit above so this round's
-                # done urls are excluded (TableIO.read pins the snapshot)
-                known_seen = io.read("url_seen").select("canonical_url")
-                fresh = (fresh
-                         .join(known_seen, "canonical_url", "left_anti")
-                         .join(remaining.select("canonical_url"),
-                               "canonical_url", "left_anti"))
-                remaining = remaining.unionByName(fresh)
-
-            if self.retry_failed:
-                # retries' = (old − urls fetched this round) ∪ next
-                # attempts, kept ONLY for urls still in the frontier.
-                # Idempotent on replay: next ⊆ this round's urls, so
-                # re-deriving from the post-crash table lands on the
-                # same rows (see WAL notes above). Backoff is
-                # exponential in attempts consumed: due = round +
-                # backoff·2^attempt. The frontier semi-join purges
-                # orphans — a retryable url later dropped from the
-                # frontier (trap-variant cap) would otherwise hold a
-                # retries row forever and pin run()'s idle-forward loop
-                # at max_rounds.
-                failed = (pages.filter(~F.col("fetch_ok"))
-                          .select("url_hash", "attempt"))
-                nxt = (failed
-                       .filter(F.col("attempt") + 1
-                               < F.lit(self.max_attempts))
-                       .select(
-                           "url_hash",
-                           (F.col("attempt") + 1).cast("int")
-                           .alias("attempt"),
-                           (F.lit(round_id)
-                            + F.lit(self.retry_backoff_rounds)
-                            * F.expr("shiftleft(1, attempt)"))
-                           .cast("int").alias("due_round")))
-                merged_retries = (retries
-                                  .join(pages.select("url_hash"),
-                                        "url_hash", "left_anti")
-                                  .unionByName(nxt)
-                                  .join(remaining.select("url_hash"),
-                                        "url_hash", "left_semi"))
-                io.overwrite(merged_retries, "retries", round_id)
-
-            # incremental bloom maintenance: OR in ONLY this round's hashes
-            # (bitmap union is associative — equals a full rebuild) instead
-            # of rescanning the whole url_seen table every round. Committed
-            # AFTER url_seen with the same round id; a crash between the
-            # two commits is detected by the round-id comparison in _bloom
-            # and repaired with a one-time full rebuild.
-            # (replay-safe without a guard: bitmap OR is idempotent, and
-            # on replay _bloom() already returned either the in-sync
-            # committed filter or a full rebuild over the post-crash
-            # url_seen — OR-ing this round's delta again changes nothing)
-            delta = B.build_bloom(new_seen.select("url_hash"),
-                                  n_buckets=self.n_bloom_buckets,
-                                  m_bits=self._bloom_m,
-                                  n_hashes=self._bloom_k)
-            merged = delta if bloom is None else B.merge_blooms(bloom, delta)
-            io.overwrite(merged, "bloom", round_id)
-
-            if self.revisit and not self._committed("fetch_history",
-                                                    round_id):
-                # re-crawl substrate: per-fetch change observations, a
-                # pure function of (pages@r, fetch_history<r) — guarded
-                # like every member of the commit set (crash between the
-                # pages and fetch_history commits replays identically)
-                io.append_round(self._build_fetch_history(pages, round_id),
-                                "fetch_history", round_id)
-
-            io.overwrite(remaining, "frontier", round_id)
-
-            # K3: per-partition lineage/metrics (manifest analog).
-            # crawl_log is the RESUME MARKER (last_round() keys on it),
-            # so it commits LAST: every earlier crash window leaves
-            # crawl_log behind and run() re-enters this round's replay
-            # path, which re-derives each outstanding commit from
-            # committed state. Were the marker committed before the
-            # frontier advance (as it once was), a crash in between
-            # would be unreplayable — resume would skip past the round,
-            # permanently losing its discovered links and leaving its
-            # fetched urls in the frontier forever.
-            log = (pages.groupBy("round", "partition_id")
-                   .agg(F.count("*").alias("n_urls"),
-                        F.sum(F.col("ok").cast("int")).alias("n_ok"),
-                        F.sum((~F.col("ok")).cast("int")).alias("n_err"),
-                        F.sum("extracted_chars").alias("extracted_chars"))
-                   .withColumn("wall_ts", F.lit(time.time()).cast("double")))
-            if not self._committed("crawl_log", round_id):
-                io.append_round(log, "crawl_log", round_id)
+            outputs = self._round_outputs(pages, pending, bloom, retries,
+                                          sig_repair, replay, round_id)
+            for name, mode in ROUND_COMMITS:
+                if name not in outputs or (
+                        mode == "append" and self._committed(name, round_id)):
+                    continue
+                commit = io.append_round if mode == "append" else io.overwrite
+                commit(outputs[name](), name, round_id)
 
             # count the COMMITTED frontier (parquet metadata read) instead
             # of re-running the anti-join lineage a second time
-            stats = {"round": round_id, "n_fetched": n_fetched,
-                     "n_remaining": io.read("frontier").count()}
-            if self.dedup_index:
-                stats["n_near_dup"] = pages.filter("near_dup").count()
-            if self.c4_filter:
-                stats["n_c4_dropped"] = pages.filter(
-                    F.col("ok") & ~F.col("c4_kept")).count()
-            if self.honor_directives:
-                stats["n_noindex"] = pages.filter("noindex").count()
-                stats["n_nofollow"] = pages.filter("nofollow").count()
+            stats = {"round": round_id, "n_fetched": counts.pop("n_fetched"),
+                     "n_remaining": io.read("frontier").count(), **counts}
             if trap_dropped is not None:
                 # stat-only action: replays the cap pipeline once more
                 # (frontier scan + count agg + window over hot rows
@@ -1503,10 +1496,8 @@ class CrawlEngine:
         rollback step; resume semantics are untouched because resume only
         ever reads LATEST."""
         out = {}
-        for name in ("frontier", "bloom", "url_seen", "pages", "crawl_log",
-                     "robots", "links", "sig_index", "fetch_history",
-                     "warc_segments", "retries", "archive_digests",
-                     "seed_set"):
+        names = BOOTSTRAP_TABLES + tuple(t for t, _ in ROUND_COMMITS)
+        for name in dict.fromkeys(names):
             if self.io.exists(name):
                 out[name] = self.io.vacuum(name, keep_last=keep_last)
         return out

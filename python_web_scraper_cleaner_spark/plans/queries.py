@@ -5457,7 +5457,7 @@ _ROBOTS_WILDCARD_RULES = [
 def q_robots_wildcard_gate(spark, sf_dir):
     """Full RFC 9309 wildcard robots matching over a synthetic frontier:
     patterns with ``*`` and trailing ``$``, longest-octets-wins,
-    equal-length ties to Allow (operators/frontier.apply_robots_wildcard;
+    equal-length ties to Allow (operators/frontier.apply_robots;
     kernel twin robots_wildcard_decision). Output: per-host allowed/blocked
     counts + summed decisive rule lengths.
 
@@ -5489,7 +5489,7 @@ def q_robots_wildcard_gate(spark, sf_dir):
         _ROBOTS_WILDCARD_RULES,
         "host string, allow_patterns array<string>, "
         "disallow_patterns array<string>")
-    gated = FR.apply_robots_wildcard(frontier, robots, keep_decision=True)
+    gated = FR.apply_robots(frontier, robots, keep_decision=True)
     return (gated.groupBy("host")
             .agg(F.count("*").alias("n_urls"),
                  F.sum(F.col("robots_allowed").cast("long"))

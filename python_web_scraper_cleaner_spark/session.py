@@ -6,8 +6,9 @@ on local[N]:
 - AQE on (runtime coalescing + skew-join splitting for hot-host skew).
 - Arrow enabled for every pandas UDF path; small ``maxRecordsPerBatch``
   because rows carry multi-KB ``html:binary`` payloads (SURVEY §4.2).
-- shuffle.partitions default sized for local runs; production submits
-  override via spark-submit conf (the code never hardcodes cluster size).
+- local[N] and shuffle.partitions default to this machine's core count;
+  production submits override via spark-submit conf (the code never
+  hardcodes cluster size).
 """
 
 from __future__ import annotations
@@ -16,19 +17,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+def local_defaults() -> tuple[str, int]:
+    """(N of local[N], shuffle partitions) for a session built without
+    explicit values: SPARK_GRAFT_CPUS and SPARK_GRAFT_SHUFFLE when set,
+    else this machine's core count for both."""
+    cores = os.cpu_count() or 1
+    return (os.environ.get("SPARK_GRAFT_CPUS", str(cores)),
+            int(os.environ.get("SPARK_GRAFT_SHUFFLE", cores)))
 
 
 def build_session(app_name: str = "python_web_scraper_cleaner_spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
                   extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, default_shuffle = local_defaults()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+                str(shuffle_partitions or default_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -171,7 +171,10 @@ class TableIO:
         Safety order: snapshot JSONs of expired versions are removed
         FIRST, data dirs second — a crash mid-vacuum leaves unreferenced
         data dirs (wasted space, repaired by the next vacuum), never a
-        snapshot that references deleted data."""
+        snapshot that references deleted data. A kept snapshot at or
+        below LATEST that cannot be read raises before anything is
+        deleted: its data dirs are unknown, so no dir is provably
+        unreferenced."""
         import shutil
 
         td = self._tdir(name)
@@ -191,7 +194,12 @@ class TableIO:
             try:
                 with open(path) as f:
                     manifest = json.load(f)
-            except (json.JSONDecodeError, OSError):
+            except (json.JSONDecodeError, OSError) as e:
+                if (fname in keep_files
+                        and int(fname[5:-5]) <= latest["snapshot"]):
+                    raise RuntimeError(
+                        f"vacuum {name}: kept snapshot {fname} is "
+                        f"unreadable; nothing deleted") from e
                 # torn snap from a crash mid-_commit: LATEST never pointed
                 # at it (the pointer advances only after a complete dump),
                 # so it is uncommitted garbage — expire it, never abort

@@ -124,6 +124,29 @@ def test_run_round_crash_not_mistaken_for_revisit_transition(
     assert resumed.seen_set() == full.seen_set()
 
 
+def test_crash_after_round_zero_pages_commit_replays(spark, tmp_path):
+    """Round 0 is a round like any other: a table at round 0 already
+    carries round 0, so a crash right after round 0's pages commit
+    replays from the committed pages instead of fetching and appending
+    the batch a second time."""
+    def mk(root):
+        e = CrawlEngine(spark, str(root), per_host_budget=4)
+        e.bootstrap(_seeds(spark, 12), _robots(spark))
+        return e
+
+    full = mk(tmp_path / "full")
+    full.run(max_rounds=5)
+
+    crashed = mk(tmp_path / "c")
+    crashed.run_round(0)
+    for t in ("url_seen", "bloom", "frontier", "crawl_log"):
+        _rollback_to_round(crashed.io, t, -1)   # only pages@0 survives
+    crashed.run(max_rounds=5)
+
+    assert crashed.crawl_order() == full.crawl_order()
+    assert crashed.seen_set() == full.seen_set()
+
+
 # ---------------------------------------------------------------------------
 # retries never outlive their frontier url
 # ---------------------------------------------------------------------------
@@ -172,6 +195,27 @@ def test_tableio_torn_snapshot_is_uncommitted_garbage(spark, tmp_path):
     assert not os.path.exists(torn)           # torn file expired
     assert io.read("x").count() == 6
     assert out["expired_snapshots"] >= 1
+
+
+def test_tableio_vacuum_refuses_unreadable_kept_snapshot(spark, tmp_path):
+    """A snapshot vacuum would keep, at or below LATEST, that it cannot
+    read is committed state, not a torn write: vacuum must raise and
+    delete nothing (not expire it and rmtree the data only it names)."""
+    import pytest
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    io.overwrite(spark.range(3), "x", 0)
+    io.overwrite(spark.range(5), "x", 1)
+    td = os.path.join(io.root, "x")
+    data_before = sorted(os.listdir(os.path.join(td, "data")))
+    snap1 = os.path.join(td, "snap-00001.json")
+    with open(snap1, "w") as f:
+        f.write('{"snapshot": 1, "round": 0, "dirs": [')  # corrupted
+    with pytest.raises(RuntimeError, match="unreadable"):
+        io.vacuum("x", keep_last=2)
+    assert os.path.exists(snap1)
+    assert sorted(os.listdir(os.path.join(td, "data"))) == data_before
+    assert io.read("x").count() == 5
 
 
 def test_tableio_snapshot_order_is_numeric_past_5_digits(spark, tmp_path):

@@ -493,8 +493,11 @@ def test_vacuum_never_expires_rolled_back_latest(spark, tmp_path):
 
 
 def test_engine_vacuum_preserves_resume_state(spark, tmp_path):
+    import os
+
     from python_web_scraper_cleaner_spark.plans.crawl import (
-        CrawlEngine, default_robots, synthesize_seeds)
+        BOOTSTRAP_TABLES, ROUND_COMMITS, CrawlEngine, default_robots,
+        synthesize_seeds)
 
     root = str(tmp_path / "eng")
     eng = CrawlEngine(spark, root, per_host_budget=8)
@@ -508,14 +511,20 @@ def test_engine_vacuum_preserves_resume_state(spark, tmp_path):
     # frontier/bloom overwrite per round -> their round-0 dirs reclaimed
     assert stats["frontier"]["removed_dirs"]
     assert stats["bloom"]["removed_dirs"]
-    # optional-mode tables are covered when present (append-only here:
-    # nothing reclaimable, but maintenance must visit them)
-    eng2 = CrawlEngine(spark, str(tmp_path / "eng2"), per_host_budget=8,
-                       priority_mode="pagerank", dedup_index=True)
+    # with every table-writing option on, the store holds exactly the
+    # declared tables (bootstrap + one round's commit set) and vacuum
+    # visits each of them
+    root2 = str(tmp_path / "eng2")
+    eng2 = CrawlEngine(spark, root2, per_host_budget=8, archive=True,
+                       archive_dedup=True, dedup_index=True,
+                       priority_mode="pagerank", revisit=True,
+                       retry_failed=True)
     eng2.bootstrap(synthesize_seeds(spark, 60), default_robots(spark))
     eng2.run_round(0)
+    declared = set(BOOTSTRAP_TABLES) | {t for t, _ in ROUND_COMMITS}
+    assert set(os.listdir(root2)) == declared
     stats2 = eng2.vacuum(keep_last=1)
-    assert "links" in stats2 and "sig_index" in stats2
+    assert set(stats2) == declared
     # state the NEXT round reads is byte-identical
     assert eng.io.read("url_seen").count() == seen_before
     assert eng.io.read("frontier").count() == frontier_before
@@ -1070,7 +1079,7 @@ def test_apply_robots_wildcard_matches_kernel_twin(spark):
     from python_web_scraper_cleaner_spark.functions.kernel import (
         robots_wildcard_decision)
     from python_web_scraper_cleaner_spark.operators.frontier import (
-        apply_robots_wildcard)
+        apply_robots)
 
     rules = {
         "ha": (["/cat0/*", "/p(1)*"], ["/*.pdf$", "/search*"]),
@@ -1089,8 +1098,8 @@ def test_apply_robots_wildcard_matches_kernel_twin(spark):
         "disallow_patterns array<string>")
 
     got = {(r.host, r.canonical_url): (r.robots_allowed, r.decisive_len)
-           for r in apply_robots_wildcard(frontier, robots,
-                                          keep_decision=True).collect()}
+           for r in apply_robots(frontier, robots,
+                                 keep_decision=True).collect()}
     assert len(got) == len(hosts) * len(paths)
     for h in hosts:
         allow, dis = rules.get(h, ([], []))
@@ -1099,48 +1108,53 @@ def test_apply_robots_wildcard_matches_kernel_twin(spark):
             assert got[(h, f"https://{h}.example{p}")] == want, (h, p)
 
     # filtering mode drops exactly the disallowed rows
-    kept = apply_robots_wildcard(frontier, robots).count()
+    kept = apply_robots(frontier, robots).count()
     n_allowed = sum(1 for v in got.values() if v[0])
     assert kept == n_allowed
 
 
 def test_engine_robots_wildcard_mode(spark, tmp_path):
-    """robots_wildcard=True: (1) on prefix-only rule tables the engine's
-    committed schedule is byte-identical to the prefix matcher (a prefix
-    is a valid RFC pattern); (2) metacharacter rules actually bite — a
-    '/*7.html$' Disallow keeps every matching URL out of pages while the
-    rest of the crawl proceeds."""
-    cols = ["url", "round", "fetch_slot", "scheduled_offset_ms"]
-
-    def run(root, robots, wildcard):
-        eng = CrawlEngine(spark, str(tmp_path / root), per_host_budget=5,
-                          robots_wildcard=wildcard)
+    """Metacharacter rules bite in the engine: a '/*7.html$' Disallow
+    keeps every matching URL out of pages while the rest of the crawl
+    proceeds."""
+    def run(root, robots):
+        eng = CrawlEngine(spark, str(tmp_path / root), per_host_budget=5)
         eng.bootstrap(make_seeds(spark), robots)
         eng.run(max_rounds=2)
         return eng.io.read("pages")
 
-    a = run("prefix", make_robots(spark), False)
-    b = run("wild", make_robots(spark), True)
-    assert (sorted(map(tuple, a.select(*cols).collect()))
-            == sorted(map(tuple, b.select(*cols).collect())))
-
     wild_rules = spark.createDataFrame(
         [(f"host{h}.example", 0, ["/private", "/*7.html$"])
          for h in range(48)], ROBOTS_SCHEMA)
-    c = run("wild2", wild_rules, True)
+    c = run("wild2", wild_rules)
     assert c.count() > 0
     assert c.filter(F.col("canonical_url").endswith("7.html")).count() == 0
     assert c.filter(F.col("canonical_url").contains("/private/")).count() == 0
-    # the same rules under the prefix matcher reduce '/*7.html$'
-    # CONSERVATIVELY (truncated at the leading '*' ⇒ disallow-all for
-    # these hosts): the prefix path over-blocks rather than silently
-    # fetching what the site disallowed — wildcard mode is how the rule
-    # gets its exact semantics (the compliant side of the mode split)
-    try:
-        n_prefix = run("prefix2", wild_rules, False).count()
-    except FileNotFoundError:
-        n_prefix = 0      # nothing ever fetched ⇒ pages never committed
-    assert n_prefix == 0
+
+
+def test_engine_wildcard_disallow_blocks_only_matching_paths(spark,
+                                                             tmp_path):
+    """Default settings, 'Disallow: /*.pdf': only the .pdf urls are
+    blocked — every other allowed url of the same hosts is fetched, and
+    the blocked ones stay in the frontier unfetched."""
+    seeds = make_seeds(spark, 60).unionByName(spark.createDataFrame(
+        [(f"https://host{h}.example/docs/report{h}.pdf", 0,
+          dt.datetime(2026, 1, 1)) for h in range(3)],
+        "url string, priority int, discovered_ts timestamp"))
+    robots = spark.createDataFrame(
+        [(f"host{h}.example", 0, ["/private", "/*.pdf"])
+         for h in range(48)], ROBOTS_SCHEMA)
+    eng = CrawlEngine(spark, str(tmp_path / "pdf"), per_host_budget=BUDGET)
+    eng.bootstrap(seeds, robots)
+    boot = {r.canonical_url for r in eng.io.read("frontier").collect()}
+    eng.run(max_rounds=5)
+
+    fetched = {r.canonical_url for r in eng.io.read("pages").collect()}
+    pdfs = {u for u in boot if u.endswith(".pdf")}
+    assert len(pdfs) == 3
+    assert fetched == {u for u in boot - pdfs if "/private" not in u}
+    left = {r.canonical_url for r in eng.io.read("frontier").collect()}
+    assert pdfs <= left
 
 
 def test_psl_lookup_cols_matches_kernel_twin(spark):

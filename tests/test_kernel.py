@@ -427,18 +427,18 @@ def test_robots_prefix_path_handles_metacharacter_rules():
     from python_web_scraper_cleaner_spark.functions.kernel import (
         parse_robots_txt, robots_allows)
     r = parse_robots_txt("User-agent: *\nDisallow: /private*", "*")
-    # raw pattern preserved for the wildcard path…
+    # raw pattern preserved…
     assert r["disallow_prefixes"] == ["/private*"]
-    # …but the prefix matcher must still BLOCK (conservative truncation)
+    # …and matched as an RFC 9309 pattern, never as a literal prefix
     assert robots_allows("/private/x", r) is False
     assert robots_allows("/public/x", r) is True
-    # $-anchored disallow over-blocks (conservative), never under-blocks
+    # $-anchored disallow blocks the exact path
     r2 = parse_robots_txt("User-agent: *\nDisallow: /exact$", "*")
     assert robots_allows("/exact", r2) is False
-    # allow rules with metacharacters drop (never under-block)
+    # the longer matching Allow pattern wins (RFC 9309 §2.2.2)
     r3 = parse_robots_txt(
         "User-agent: *\nDisallow: /p\nAllow: /p/ok*", "*")
-    assert robots_allows("/p/ok-page", r3) is False
+    assert robots_allows("/p/ok-page", r3) is True
 
 
 def test_robots_empty_user_agent_token_is_ignored():

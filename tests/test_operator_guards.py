@@ -52,10 +52,12 @@ def test_projection_bucket_raises_on_dim_mismatch(spark):
 
     from python_web_scraper_cleaner_spark.operators.similarity import (
         projection_bucket)
-    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])],
+    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0]), (2, None)],
                                "id long, vec array<double>")
-    good = df.select(projection_bucket(F.col("vec"), dims=3).alias("b"))
-    assert 0 <= good.collect()[0].b < 16
+    good = {r.id: r.b for r in df.select(
+        "id", projection_bucket(F.col("vec"), dims=3).alias("b")).collect()}
+    assert 0 <= good[1] < 16
+    assert good[2] is None      # a missing embedding has no bucket
     bad = df.select(projection_bucket(F.col("vec"), dims=64).alias("b"))
     with pytest.raises(SparkRuntimeException):
         bad.collect()   # loud, not silently bucket 0

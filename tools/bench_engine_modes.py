@@ -55,10 +55,6 @@ MODES = {
     # observed-latency politeness: per-round exact-p95 estimate over
     # committed pages + broadcast delay override before selection
     "adaptive_delay": {"adaptive_delay": True, "round_ms": 10_000_000},
-    # RFC 9309 wildcard robots matching: broadcast side carries
-    # pattern→regex rules; prices the per-candidate regex gate vs the
-    # prefix-only path
-    "robots_wildcard": {"robots_wildcard": True},
     # URL pre-fetch filter: per-candidate lexical gate at both frontier
     # ingestion points (bootstrap + discovery)
     "url_filter": {"url_filter": True},
