@@ -2,8 +2,9 @@
 
 Reference analog: the URL-seen set rebuilt from disk each run
 (/root/reference/scripts/news.py:17-28) — a Python set() that cannot hold
-10^10 entries. The engine replaces it with B bucketed numpy bitmaps built by
-``mapInPandas`` (vectorized, per BASELINE.json: pandas/Arrow UDFs only):
+10^10 entries. This operator (the ``j1_bloom_prefilter`` registry entry)
+replaces it with B bucketed numpy bitmaps built by ``mapInPandas``
+(vectorized, per BASELINE.json: pandas/Arrow UDFs only):
 
 - build: url_hash = xxhash64(canonical_url) (JVM built-in); bucket =
   pmod(url_hash, B); per bucket one bitmap of m bits with k probe positions
@@ -15,7 +16,10 @@ Bloom is strictly a pre-filter: false positives would DROP never-seen URLs,
 so survivors of the "maybe seen" class are confirmed by the exact
 ``left_anti`` join (SURVEY §7 risk 3). False-negative rate is zero by
 construction, so "definitely new" rows skip the exact join entirely — at
-scale that removes ~99% of the anti-join's probe side.
+scale that removes ~99% of the anti-join's probe side. CrawlEngine keeps
+no filter: its frontier holds only urls that discovery already anti-joined
+against url_seen, so a filter would save no exact lookups there while
+costing a whole-table rewrite per round; it runs the exact join alone.
 
 Sizing: m_bits per bucket for n items at p FPR: m = -n ln p / (ln 2)^2.
 With B buckets the build is embarrassingly parallel and each bitmap stays
@@ -118,60 +122,13 @@ def build_bloom(df: DataFrame, hash_col: str = "url_hash", *,
     return bucketed.mapInPandas(build, schema=BLOOM_SCHEMA)
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-union two BLOOM_SCHEMA tables built with identical (m_bits,
-    n_hashes). Bitmap union is associative and commutative, so maintaining
-    the filter incrementally — committed filter ∪ a delta built from only
-    the new round's hashes — yields byte-identical bitmaps to a full
-    rebuild over the union of inputs, at delta cost instead of a full
-    url_seen rescan per round. ``n_items`` adds (an upper bound under
-    re-inserts; FPR monitoring only — correctness never depends on it).
-    Mismatched geometry raises: OR-ing bitmaps of different m/k silently
-    corrupts membership. The check is GLOBAL (one tiny distinct over the
-    stamp columns), not only per-bucket: two builds whose non-empty
-    buckets happen to be disjoint would otherwise merge silently and
-    bloom_geometry's first() would misreport the mixed table as
-    uniform."""
-    stamps = (a.select("n_buckets", "m_bits", "n_hashes")
-              .unionByName(b.select("n_buckets", "m_bits", "n_hashes"))
-              .distinct().limit(2).collect())
-    if len(stamps) > 1:
-        raise ValueError(
-            "bloom geometry drift between merge inputs: "
-            + ", ".join(str(tuple(r)) for r in stamps)
-            + " — filters built with different sizing cannot be OR-merged")
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if (pdf["m_bits"].nunique() > 1 or pdf["n_hashes"].nunique() > 1
-                or pdf["n_buckets"].nunique() > 1):
-            raise ValueError(
-                f"bloom geometry drift in bucket {int(pdf['bucket'].iloc[0])}:"
-                f" n_buckets {sorted(pdf['n_buckets'].unique())},"
-                f" m_bits {sorted(pdf['m_bits'].unique())}, n_hashes"
-                f" {sorted(pdf['n_hashes'].unique())} — filters built with"
-                " different sizing cannot be OR-merged")
-        if len(pdf) == 1:
-            return pdf
-        bm = np.frombuffer(pdf["bitmap"].iloc[0], dtype=np.uint8).copy()
-        for raw in pdf["bitmap"].iloc[1:]:
-            bm |= np.frombuffer(raw, dtype=np.uint8)
-        out = pdf.iloc[:1].copy()
-        out["n_items"] = int(pdf["n_items"].sum())
-        out["bitmap"] = [bm.tobytes()]
-        return out
-
-    return (a.unionByName(b)
-            .groupBy("bucket").applyInPandas(merge, schema=BLOOM_SCHEMA))
-
-
 def bloom_geometry(bloom: DataFrame) -> tuple[int, int, int] | None:
-    """(n_buckets, m_bits, n_hashes) stamped on a persisted BLOOM_SCHEMA
-    table (every row carries the same values — merge_blooms enforces it),
-    or None for an empty table. One first() over parquet metadata-sized
-    rows; used to detect config drift between engine runs: probing with a
+    """(n_buckets, m_bits, n_hashes) stamped on a BLOOM_SCHEMA table
+    (one build_bloom call stamps every row the same), or None for an
+    empty table. One first() over parquet metadata-sized rows;
+    bloom_probe buckets its candidates with it, because probing with a
     different n_buckets remaps hashes to the wrong bucket and yields
-    silent FALSE NEGATIVES, so mismatched geometry must trigger a full
-    rebuild, never a probe."""
+    silent FALSE NEGATIVES."""
     if not {"n_buckets", "m_bits", "n_hashes"}.issubset(bloom.columns):
         return None      # pre-stamp table: geometry unknowable
     row = bloom.select("n_buckets", "m_bits", "n_hashes").first()

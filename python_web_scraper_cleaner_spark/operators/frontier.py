@@ -164,8 +164,12 @@ def select_round_batch(frontier: DataFrame, *, per_host_budget: int,
     Plain path: one window per host. Hot-host path: hosts whose pending
     count exceeds ``hot_host_threshold`` are salted into ``n_salts``
     sub-groups keyed (host, salt) — the window shuffle then spreads a
-    mega-host over n_salts reducers instead of one (skew kill). Budget is
-    split evenly across salts (ceil), preserving the per-host total.
+    mega-host over n_salts reducers instead of one (skew kill). Each salt
+    keeps its own top ``budget``, which must contain every url of the
+    host's top ``budget`` that hashed to it; a second per-host window then
+    cuts exactly the host's top ``budget``. So salting changes the shuffle
+    and nothing else: the batch, fetch_slot included, equals the plain
+    path's.
 
     ``round_ms`` makes the budget DELAY-AWARE: a host whose robots
     crawl-delay is d ms can politely absorb at most round_ms/d fetches in
@@ -205,19 +209,16 @@ def select_round_batch(frontier: DataFrame, *, per_host_budget: int,
                                  F.pmod(F.xxhash64("canonical_url"),
                                         F.lit(n_salts)))
                           .otherwise(F.lit(0))))
-    per_salt = F.when(F.col("_pending").isNotNull(),
-                      F.ceil(budget / n_salts)) \
-                .otherwise(budget)
     w = Window.partitionBy("host", "_salt").orderBy(*order)
     survivors = (salted.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") <= per_salt)
+                 .filter(F.col("rn") <= budget)
                  .drop("rn", "_salt", "_pending"))
-    # per-salt ceil() overshoots for hot hosts (n_salts·ceil(B/S) ≥ B, e.g.
-    # B=5, 8 salts → 8 selected): a second per-host window over the salted
-    # survivors caps the batch at exactly B. Cheap by construction — its
-    # input is already ≤ B + n_salts rows per host, so the single-reducer-
-    # per-host skew the salting avoided cannot reappear here. Its rank IS
-    # the final per-host fetch order, exported as fetch_slot.
+    # the salted survivors overshoot for hot hosts (up to n_salts·B rows):
+    # a second per-host window over them cuts exactly the host's top B.
+    # Cheap by construction — its input is already ≤ n_salts·B rows per
+    # host, so the single-reducer-per-host skew the salting avoided cannot
+    # reappear here. Its rank IS the final per-host fetch order, exported
+    # as fetch_slot.
     w2 = Window.partitionBy("host").orderBy(*order)
     return (survivors.withColumn("fetch_slot", F.row_number().over(w2))
             .filter(F.col("fetch_slot") <= budget))

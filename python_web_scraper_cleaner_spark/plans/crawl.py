@@ -6,7 +6,7 @@ scripts/news.py + scripts/trafilatura_scraper.py + scraper_cleaner/
 html_cleaner_core.py:run_batch), re-expressed as north_rule demands:
 
   round r:
-    pending frontier ──bloom prefilter──► exact anti-join vs url_seen (J1)
+    pending frontier ──exact anti-join vs url_seen (J1)
       ──robots broadcast filter (J3)──► dynamic priority (optional,
       priority_mode='pagerank'|'opic'|'trustrank': committed link graph
       → the chosen centrality × revisit due-ness, the frontier_priority
@@ -26,7 +26,7 @@ html_cleaner_core.py:run_batch), re-expressed as north_rule demands:
       extracted-text twins — the pair of files Common Crawl ships;
       archive_dedup=True additionally maintains archive_digests+r and
       writes ISO 28500 revisit stubs instead of already-archived payload
-      bytes), sig_index+r, links+r, url_seen+r, retries, bloom,
+      bytes), sig_index+r, links+r, url_seen+r, retries,
       fetch_history+r, frontier−batch, crawl_log+r (the resume marker)
 
 Every table commit is one TableIO snapshot per round, so a killed job
@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.udfs import with_clean_text
-from ..operators import bloom as B
 from ..operators import frontier as FR
 from ..sources.pages import page_record
 from ..sources.tableio import TableIO
@@ -98,14 +97,13 @@ _FETCH_EXTRA = [
 
 _DOCID_RE = _re.compile(r"/(\d+)\.html$")
 
-# Fixed policy values. BLOOM_FPR sizes the bloom filter: a committed
-# store is only usable by an engine with the same filter geometry, so
-# these are constants, not options.
+# Fixed policy values, constants rather than options.
 DISCOVERY_PRIORITY = 9     # discovered links crawl after every seed
 PAGERANK_ITERS = 3         # fixed-point iterations of every rank mode
 DEDUP_THRESHOLD = 0.7      # MinHash Jaccard estimate flagging a near-dup
 C4_MIN_WORDS = 5           # C4 words-per-line floor
-BLOOM_FPR = 0.01
+MAX_ATTEMPTS = 3           # fetches a url gets in retry mode
+RETRY_BACKOFF_ROUNDS = 1   # retry due = round + backoff·2^attempt
 
 # Tables bootstrap() writes (frontier is rewritten every round too).
 BOOTSTRAP_TABLES = ("frontier", "robots", "seed_set")
@@ -130,7 +128,6 @@ ROUND_COMMITS = (
     ("links", "append"),
     ("url_seen", "append"),
     ("retries", "overwrite"),
-    ("bloom", "overwrite"),
     ("fetch_history", "append"),
     ("frontier", "overwrite"),
     ("crawl_log", "append"),
@@ -247,8 +244,6 @@ class CrawlEngine:
 
     def __init__(self, spark: SparkSession, root: str, *,
                  per_host_budget: int = 5,
-                 n_bloom_buckets: int = 16,
-                 bloom_capacity_per_bucket: int = 100_000,
                  hot_host_threshold: int | None = None,
                  n_salts: int = 8,
                  discover_links: bool = False,
@@ -263,8 +258,6 @@ class CrawlEngine:
                  adaptive_delay: bool = False,
                  round_ms: int | None = None,
                  retry_failed: bool = False,
-                 max_attempts: int = 3,
-                 retry_backoff_rounds: int = 1,
                  url_filter: bool = False,
                  strip_tracking: bool = False,
                  c4_filter: bool = False,
@@ -273,14 +266,6 @@ class CrawlEngine:
         self.spark = spark
         self.io = TableIO(spark, root)
         self.per_host_budget = per_host_budget
-        self.n_bloom_buckets = n_bloom_buckets
-        # Fixed filter geometry, sized ONCE from design capacity (not from
-        # the current url_seen count): incremental OR-maintenance requires
-        # every delta to share (m_bits, n_hashes). Size n_bloom_buckets ×
-        # bloom_capacity_per_bucket for the deployment's total URL volume
-        # (10^10 URLs: B=16384 at the default per-bucket capacity).
-        self._bloom_m = B.optimal_m_bits(bloom_capacity_per_bucket, BLOOM_FPR)
-        self._bloom_k = B.optimal_k(self._bloom_m, bloom_capacity_per_bucket)
         self.hot_host_threshold = hot_host_threshold
         self.n_salts = n_salts
         # URL discovery: harvest <a href> from fetched pages and grow the
@@ -333,7 +318,7 @@ class CrawlEngine:
         # the `sig_index` table (operators/dedup.minhash_lsh_probe_index),
         # flags near-dups in the pages sink, and appends only the KEPT
         # docs' bands — the corpus is never re-shingled. Fixed signature
-        # geometry per store, same contract as the bloom filter.
+        # geometry per store.
         self.dedup_index = dedup_index
         self._sig_k, self._sig_hashes, self._sig_band = 3, 16, 4
         # Archival sink: commit each round's captures as WARC segments
@@ -388,20 +373,15 @@ class CrawlEngine:
         # failed fetch as permanent. Failed urls stay OUT of url_seen and
         # IN the frontier while attempts remain; a `retries` table
         # (url_hash, attempt, due_round) gates re-selection with
-        # exponential backoff (due = round + backoff·2^attempt); urls
-        # that exhaust max_attempts enter url_seen as permanent failures.
+        # exponential backoff (due = round + RETRY_BACKOFF_ROUNDS·
+        # 2^attempt); urls that exhaust MAX_ATTEMPTS enter url_seen as
+        # permanent failures.
         # All transitions are pure functions of committed tables, so WAL
         # replay and kill/resume stay byte-identical. The simulated fetch
         # seam models transience as a pure function of (url_hash,
         # attempt) — a REAL fetcher just reports fetch_ok and everything
         # downstream is already wired.
         self.retry_failed = retry_failed
-        if max_attempts < 1:
-            raise ValueError("max_attempts must be >= 1")
-        if retry_backoff_rounds < 0:
-            raise ValueError("retry_backoff_rounds must be >= 0")
-        self.max_attempts = max_attempts
-        self.retry_backoff_rounds = retry_backoff_rounds
         # URL pre-fetch filter (operators/frontier.url_prefilter): gate
         # BOTH frontier-ingestion points — bootstrap seeds and per-round
         # discovered links — so a blocklisted/spam-shaped url never
@@ -535,38 +515,6 @@ class CrawlEngine:
     def last_round(self) -> int:
         r = self.io.latest_round("crawl_log")
         return -1 if r is None else r
-
-    def _bloom(self, seen: DataFrame) -> DataFrame:
-        """The URL-seen bloom filter for this round: the committed filter
-        table when it is in sync with url_seen (the per-round fast path —
-        no url_seen rescan), else a one-time full rebuild (first round
-        after upgrade, or a crash landed between the url_seen and bloom
-        commits — bloom must never MISS a seen hash, or a dup re-crawls).
-
-        Sync means BOTH round id AND filter geometry. Every bloom row is
-        stamped with (n_buckets, m_bits, n_hashes); if this engine's
-        config differs from what built the committed filter, the table is
-        unusable — a different n_buckets remaps hashes to other buckets
-        (probe would return silent false negatives → duplicate crawls),
-        and a different m/k would wedge merge_blooms at commit time on
-        every retry. Either drift falls back to a full rebuild with the
-        CURRENT geometry, which the commit then overwrites."""
-        io = self.io
-        if (io.exists("bloom")
-                and io.latest_round("bloom") == io.latest_round("url_seen")):
-            committed = io.read("bloom")
-            # a bloom table committed by a pre-geometry-stamp build lacks
-            # the stamp columns entirely — that is geometry drift too
-            # (unknowable geometry ⇒ unusable filter), so it must take the
-            # same full-rebuild fallback, not raise on the select
-            stamped = {"n_buckets", "m_bits", "n_hashes"}.issubset(
-                committed.columns)
-            if stamped and B.bloom_geometry(committed) == (
-                    self.n_bloom_buckets, self._bloom_m, self._bloom_k):
-                return committed
-        return B.build_bloom(seen.select("url_hash"),
-                             n_buckets=self.n_bloom_buckets,
-                             m_bits=self._bloom_m, n_hashes=self._bloom_k)
 
     def _ranks_at_basis(self, basis: int):
         """Centrality frame (id, rank_fp) over the links committed BEFORE
@@ -718,8 +666,8 @@ class CrawlEngine:
         path; a round-id gap vs ``pages`` (crash between the two commits,
         or dedup_index newly enabled on an existing store) is repaired by
         banding ONLY the gap rounds' kept docs — bounded re-shingling,
-        never the whole corpus (same repair contract as _bloom). The
-        repair bands join this round's append so the store heals."""
+        never the whole corpus. The repair bands join this round's
+        append so the store heals."""
         from ..operators import dedup as D
         io = self.io
         if not io.exists("pages"):
@@ -941,8 +889,7 @@ class CrawlEngine:
         """The re-crawl transition: pages DUE under the Cho–G-M backoff
         (last fetch ts + next_interval_hours ≤ round_id, intervals from
         operators/frontier.revisit_schedule over the committed
-        fetch_history) re-enter the frontier, leave url_seen, and the
-        bloom filter is rebuilt over the compacted seen set — all
+        fetch_history) re-enter the frontier and leave url_seen — both
         committed at ``round_id`` (the transition owns a round id so
         last_round()/resume see it). Returns the number of due pages.
 
@@ -951,7 +898,7 @@ class CrawlEngine:
         round_id) — tables this transition never writes — and each
         commit is a set operation that re-applies to the same result
         (frontier ∪ due deduped on the canonical key; url_seen − due
-        twice is url_seen − due; bloom/crawl_log rebuild/guard). A crash
+        twice is url_seen − due; crawl_log guard). A crash
         between any two commits heals by re-running the whole
         transition (run() detects frontier round > last_round and does
         exactly that), landing byte-identical to an uninterrupted one.
@@ -959,8 +906,7 @@ class CrawlEngine:
         Scale shape: everything is keyed on the 8-byte url_hash; the
         due set is typically a small fraction of the corpus, so the
         frontier/url_seen updates are anti/semi joins with a small
-        build side; the bloom rebuild is the one full url_seen scan —
-        the same cost _bloom already pays on any geometry drift.
+        build side.
 
         With dedup_index=True a refetched page probes an index that
         already contains its own bands: the probe drops self-pairs
@@ -1005,11 +951,6 @@ class CrawlEngine:
         # lineage stays on the pre-transition versions
         compacted = io.read("url_seen").join(due, "url_hash", "left_anti")
         io.overwrite(compacted, "url_seen", round_id)
-        io.overwrite(
-            B.build_bloom(compacted.select("url_hash"),
-                          n_buckets=self.n_bloom_buckets,
-                          m_bits=self._bloom_m, n_hashes=self._bloom_k),
-            "bloom", round_id)
         if not self._committed("crawl_log", round_id):
             # partition_id = -1 marks the revisit-transition row; it
             # advances last_round() so resume lands after the transition
@@ -1031,17 +972,17 @@ class CrawlEngine:
         r = self.io.latest_round(name)
         return r is not None and r >= round_id
 
-    def _fetch_round(self, pending: DataFrame, seen: DataFrame, bloom,
-                     retries, round_id: int) -> tuple:
+    def _fetch_round(self, pending: DataFrame, retries,
+                     round_id: int) -> tuple:
         """Select, fetch and extract this round's batch: (pages frame,
         signature-index repair bands | None)."""
         io = self.io
         sig_repair = None
-        if bloom is not None:
-            fresh = B.bloom_dedup(pending, seen, bloom,
-                                  n_buckets=self.n_bloom_buckets)
-        else:
-            fresh = pending
+        # J1: one exact left_anti join of the pending frontier against
+        # url_seen — the only seen-url check, so it covers every way a
+        # url enters the frontier (discovery, re-seeding, revisit)
+        seen = io.read_or_empty("url_seen", SEEN_SCHEMA)
+        fresh = pending.join(seen.select("url_hash"), "url_hash", "left_anti")
         if self.retry_failed:
             # retry gate: join per-url attempt state; urls whose
             # backoff window is still open sit this round out (they
@@ -1159,7 +1100,7 @@ class CrawlEngine:
             # localCheckpoint, not persist: the probe + flag + every
             # commit re-enter this frame, and a plain persist caches
             # the DATA but not the analyzed plan — each consumer
-            # would re-analyze the whole round lineage (bloom probe
+            # would re-analyze the whole round lineage (seen anti-join
             # + rank join + windows + Arrow stages; measured ~+10
             # s/round of pure driver time at a 2.6k-url demo round).
             # The frame is batch-sized and html is already dropped,
@@ -1172,7 +1113,7 @@ class CrawlEngine:
             pages = self._flag_near_dups(pages, index_bands)
         return pages, sig_repair
 
-    def _round_outputs(self, pages: DataFrame, pending: DataFrame, bloom,
+    def _round_outputs(self, pages: DataFrame, pending: DataFrame,
                        retries, sig_repair, replay: bool,
                        round_id: int) -> dict:
         """The round's commit set as {table: zero-argument builder}, one
@@ -1243,12 +1184,12 @@ class CrawlEngine:
 
         # retry mode: a transiently-failed url with attempts left is NOT
         # done — it stays out of url_seen (and in the frontier) until it
-        # succeeds or exhausts max_attempts. `done` is the membership set
+        # succeeds or exhausts MAX_ATTEMPTS. `done` is the membership set
         # every downstream commit keys on.
         if self.retry_failed:
             done = pages.filter(
                 F.col("fetch_ok")
-                | (F.col("attempt") + 1 >= F.lit(self.max_attempts)))
+                | (F.col("attempt") + 1 >= F.lit(MAX_ATTEMPTS)))
         else:
             done = pages
         new_seen = done.select(
@@ -1304,12 +1245,12 @@ class CrawlEngine:
             # variant cap) would otherwise hold a retries row forever and
             # pin run()'s idle-forward loop at max_rounds.
             nxt = (pages.filter(~F.col("fetch_ok"))
-                   .filter(F.col("attempt") + 1 < F.lit(self.max_attempts))
+                   .filter(F.col("attempt") + 1 < F.lit(MAX_ATTEMPTS))
                    .select(
                        "url_hash",
                        (F.col("attempt") + 1).cast("int").alias("attempt"),
                        (F.lit(round_id)
-                        + F.lit(self.retry_backoff_rounds)
+                        + F.lit(RETRY_BACKOFF_ROUNDS)
                         * F.expr("shiftleft(1, attempt)"))
                        .cast("int").alias("due_round")))
             return (retries
@@ -1321,24 +1262,6 @@ class CrawlEngine:
         if self.retry_failed:
             out["retries"] = merged_retries
 
-        def merged_bloom():
-            # incremental bloom maintenance: OR in ONLY this round's
-            # hashes (bitmap union is associative — equals a full
-            # rebuild) instead of rescanning url_seen every round.
-            # Committed AFTER url_seen with the same round id; a crash
-            # between the two commits is detected by the round-id
-            # comparison in _bloom and repaired with a one-time full
-            # rebuild. Replay-safe as an overwrite: bitmap OR is
-            # idempotent, and on replay _bloom() already returned either
-            # the in-sync committed filter or a full rebuild over the
-            # post-crash url_seen.
-            delta = B.build_bloom(new_seen.select("url_hash"),
-                                  n_buckets=self.n_bloom_buckets,
-                                  m_bits=self._bloom_m,
-                                  n_hashes=self._bloom_k)
-            return delta if bloom is None else B.merge_blooms(bloom, delta)
-
-        out["bloom"] = merged_bloom
         if self.revisit:
             # re-crawl substrate: per-fetch change observations
             out["fetch_history"] = lambda: self._build_fetch_history(
@@ -1366,12 +1289,6 @@ class CrawlEngine:
             # it's a pure function of the committed frontier)
             pending, trap_dropped = FR.cap_trap_variants(
                 pending, max_variants=self.trap_variant_cap)
-        seen = io.read_or_empty("url_seen", SEEN_SCHEMA)
-
-        # J1: bloom prefilter + exact anti-join against url_seen. The
-        # filter is PERSISTED and maintained incrementally (see _bloom):
-        # no full url_seen rescan (and no seen.count() action) per round.
-        bloom = self._bloom(seen) if io.exists("url_seen") else None
         retries = (io.read_or_empty("retries", RETRY_SCHEMA)
                    if self.retry_failed else None)
 
@@ -1391,8 +1308,8 @@ class CrawlEngine:
         if replay:
             pages = io.read("pages").filter(F.col("round") == round_id)
         else:
-            pages, sig_repair = self._fetch_round(pending, seen, bloom,
-                                                  retries, round_id)
+            pages, sig_repair = self._fetch_round(pending, retries,
+                                                  round_id)
         # one shuffle-free pass feeds the commits: cache the round result.
         # persist (NOT localCheckpoint) is deliberate here: the commit
         # consumers re-plan the round lineage, but with the static plan
@@ -1416,7 +1333,7 @@ class CrawlEngine:
                          F.count_if("nofollow").alias("n_nofollow")]
             counts = pages.agg(*aggs).first().asDict()
 
-            outputs = self._round_outputs(pages, pending, bloom, retries,
+            outputs = self._round_outputs(pages, pending, retries,
                                           sig_repair, replay, round_id)
             for name, mode in ROUND_COMMITS:
                 if name not in outputs or (
@@ -1474,7 +1391,7 @@ class CrawlEngine:
                         and self.io.read("retries").limit(1).count() > 0):
                     # outstanding retries whose backoff window is still
                     # open: idle forward to their due round (bounded —
-                    # every entry's due_round is ≤ backoff·2^max_attempts
+                    # every entry's due_round is ≤ backoff·2^MAX_ATTEMPTS
                     # ahead, and max_rounds still caps the loop)
                     round_id += 1
                     continue
@@ -1490,8 +1407,8 @@ class CrawlEngine:
 
     def vacuum(self, *, keep_last: int = 2) -> dict:
         """Expire old table snapshots (TableIO.vacuum per engine table).
-        A long crawl overwrites frontier and bloom EVERY round, so without
-        maintenance their superseded data dirs accumulate one per round —
+        A long crawl overwrites frontier EVERY round, so without
+        maintenance its superseded data dirs accumulate one per round —
         at 10^10 urls that is real storage. keep_last=2 preserves one
         rollback step; resume semantics are untouched because resume only
         ever reads LATEST."""

@@ -6,7 +6,7 @@ batch micro-rounds (plans/crawl.py). This module is the *continuous*
 alternative: a file-source stream over the ``pages`` table directory,
 watermarked event-time windows for the crawl-log rollup, and a stateful
 URL-seen dedup via ``applyInPandasWithState`` — the streaming twin of the
-bloom/anti-join path (operators/bloom.py, plans/queries.py J1).
+exact anti-join path (plans/queries.py J1).
 
 Scale notes (100 TB): the file source scales by listing only new files per
 micro-batch (Iceberg/Delta streaming sources replace it on a real
@@ -14,6 +14,13 @@ deployment); state for URL-seen shards by ``url_hash % n_buckets`` so each
 state row holds one bounded numpy-backed hash set, and the shuffle key is
 the bucket id — hot hosts cannot skew state because bucketing is uniform
 in the hash domain.
+
+Checkpoint migration: the URL-seen state schema is
+``seen array<long>, n_buckets int``. A checkpoint written before the
+``n_buckets`` field existed must be discarded (delete the checkpoint dir and
+re-run from the source): Spark's state-schema compatibility check rejects
+it when the query starts, before the dedup function's geometry error can
+fire.
 """
 
 from __future__ import annotations
@@ -84,12 +91,12 @@ def _make_dedup_state_fn(max_hashes_per_bucket: int, n_buckets: int):
     sets. Enforces the state sizing contract: exceeding
     ``max_hashes_per_bucket`` raises a capacity error naming the fix.
 
-    The geometry stamp is the streaming twin of CrawlEngine._bloom's
-    guard: resuming an existing checkpoint with a different n_buckets
-    silently remaps every url_hash to a different state bucket whose
-    seen-set doesn't contain it — previously-emitted urls re-emit as
-    first-seen. A stamped bucket whose n_buckets differs from the
-    running query's raises loudly instead of silently duplicating."""
+    The geometry stamp guards a resumed checkpoint: resuming it with a
+    different n_buckets silently remaps every url_hash to a different
+    state bucket whose seen-set doesn't contain it — previously-emitted
+    urls re-emit as first-seen. A stamped bucket whose n_buckets differs
+    from the running query's raises loudly instead of silently
+    duplicating."""
 
     def _dedup_state_fn(
             key: Tuple[int], pdfs: Iterator["Any"], state: GroupState

@@ -53,7 +53,7 @@ def test_crawl_log_is_the_last_commit_of_a_round(spark, tmp_path):
     eng.run(max_rounds=2)
     last = eng.last_round()
     # every member of the commit set is at (or past) the marker's round
-    for t in ("pages", "url_seen", "bloom", "frontier"):
+    for t in ("pages", "url_seen", "frontier"):
         assert (eng.io.latest_round(t) or -1) >= last, t
 
 
@@ -139,7 +139,7 @@ def test_crash_after_round_zero_pages_commit_replays(spark, tmp_path):
 
     crashed = mk(tmp_path / "c")
     crashed.run_round(0)
-    for t in ("url_seen", "bloom", "frontier", "crawl_log"):
+    for t in ("url_seen", "frontier", "crawl_log"):
         _rollback_to_round(crashed.io, t, -1)   # only pages@0 survives
     crashed.run(max_rounds=5)
 

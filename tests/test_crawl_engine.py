@@ -104,14 +104,15 @@ def test_repeat_run_is_deterministic(spark, tmp_path):
 
 
 def test_salted_engine_same_coverage(spark, tmp_path):
-    """Hot-host salting changes batch composition but not the final crawl
-    coverage: once drained, both engines fetched the same URL set."""
+    """Hot-host salting does not change the crawl: once drained, both
+    engines fetched the same URL set in the same order."""
     plain = CrawlEngine(spark, str(tmp_path / "p"), per_host_budget=BUDGET)
     salted = CrawlEngine(spark, str(tmp_path / "s"), per_host_budget=BUDGET,
                          hot_host_threshold=20, n_salts=4)
     drain(plain, spark)
     drain(salted, spark)
     assert plain.seen_set() == salted.seen_set()
+    assert plain.crawl_order() == salted.crawl_order()
     # salted run is deterministic too
     salted2 = CrawlEngine(spark, str(tmp_path / "s2"), per_host_budget=BUDGET,
                           hot_host_threshold=20, n_salts=4)
@@ -144,48 +145,6 @@ def test_reseeding_already_crawled_urls_is_noop(spark, tmp_path):
         F.col("round") > 0).select("canonical_url").collect()}
     # none of the new fetches re-crawled a seen url — guaranteed by dedup
     assert n_after - n_before <= 100
-
-
-def test_incremental_bloom_equals_rebuild_and_repairs(spark, tmp_path):
-    """The persisted bloom table is maintained by OR-ing in only each
-    round's delta; after any number of rounds its bitmaps must be
-    byte-identical to a full rebuild over url_seen (union associativity),
-    and a bloom/url_seen round mismatch (crash between the two commits)
-    must repair via full rebuild instead of silently missing hashes."""
-    from python_web_scraper_cleaner_spark.operators import bloom as B
-
-    eng = CrawlEngine(spark, str(tmp_path / "c"), per_host_budget=10)
-    eng.bootstrap(make_seeds(spark), make_robots(spark))
-    eng.run(max_rounds=30)   # several rounds at budget 10
-
-    assert eng.io.latest_round("bloom") == eng.io.latest_round("url_seen")
-    committed = {r["bucket"]: r["bitmap"]
-                 for r in eng.io.read("bloom").collect()}
-    rebuilt = {r["bucket"]: r["bitmap"]
-               for r in B.build_bloom(
-                   eng.io.read("url_seen").select("url_hash"),
-                   n_buckets=eng.n_bloom_buckets,
-                   m_bits=eng._bloom_m, n_hashes=eng._bloom_k).collect()}
-    assert committed == rebuilt
-
-    # crash simulation: url_seen advances but bloom does not → _bloom()
-    # must fall back to a full rebuild (same bitmaps), not trust the stale
-    # filter
-    eng.io.append_round(
-        spark.createDataFrame(
-            [(12345, "https://hostx.example/x", 99)],
-            "url_hash long, canonical_url string, first_seen_round int"),
-        "url_seen", 99)
-    seen = eng.io.read("url_seen")
-    repaired = eng._bloom(seen)
-    got = {r["bucket"]: r["bitmap"] for r in repaired.collect()}
-    full = {r["bucket"]: r["bitmap"]
-            for r in B.build_bloom(seen.select("url_hash"),
-                                   n_buckets=eng.n_bloom_buckets,
-                                   m_bits=eng._bloom_m,
-                                   n_hashes=eng._bloom_k).collect()}
-    assert got == full
-    assert got != committed   # the new hash actually changed a bitmap
 
 
 def test_parse_robots_table_and_apply(spark):
@@ -367,71 +326,6 @@ def test_discovery_crawls_link_closure(spark, tmp_path):
     assert eng.crawl_order() == eng2.crawl_order()
 
 
-def test_bloom_pre_stamp_schema_falls_back_to_rebuild(spark, tmp_path):
-    """A bloom table committed by a pre-geometry-stamp build lacks the
-    (n_buckets, m_bits, n_hashes) columns entirely; _bloom must treat
-    that as geometry drift (full rebuild), not raise AnalysisException
-    on the stamp select — resume on an upgraded store must just work."""
-    from python_web_scraper_cleaner_spark.operators import bloom as B
-
-    eng = CrawlEngine(spark, str(tmp_path / "c"), per_host_budget=10)
-    eng.bootstrap(make_seeds(spark), make_robots(spark))
-    eng.run(max_rounds=2)
-
-    # rewrite the committed bloom WITHOUT the stamp columns, same round
-    old = eng.io.read("bloom").drop("n_buckets", "m_bits", "n_hashes")
-    eng.io.overwrite(old, "bloom", eng.io.latest_round("url_seen"))
-
-    seen = eng.io.read("url_seen")
-    repaired = eng._bloom(seen)   # must not raise
-    got = {r["bucket"]: r["bitmap"] for r in repaired.collect()}
-    want = {r["bucket"]: r["bitmap"]
-            for r in B.build_bloom(seen.select("url_hash"),
-                                   n_buckets=eng.n_bloom_buckets,
-                                   m_bits=eng._bloom_m,
-                                   n_hashes=eng._bloom_k).collect()}
-    assert got == want
-    # and the engine keeps crawling without double-fetching
-    eng.run(max_rounds=2)
-    assert (eng.io.read("pages").groupBy("canonical_url").count()
-            .filter("count > 1").count()) == 0
-
-
-def test_bloom_geometry_drift_triggers_full_rebuild(spark, tmp_path):
-    """Changing any bloom geometry knob between engine runs on the same
-    store must NOT be trusted: a different n_buckets remaps hashes to
-    other buckets (probe → silent false negatives → duplicate crawls);
-    different m/k wedges merge_blooms at commit. _bloom() must detect the
-    stamped-geometry mismatch and fall back to a full rebuild, after
-    which rounds proceed and still never fetch a URL twice."""
-    from python_web_scraper_cleaner_spark.operators import bloom as B
-
-    root = str(tmp_path / "c")
-    eng1 = CrawlEngine(spark, root, per_host_budget=10, n_bloom_buckets=16)
-    eng1.bootstrap(make_seeds(spark), make_robots(spark))
-    eng1.run(max_rounds=3)           # leaves a committed 16-bucket filter
-    done1 = eng1.io.read("pages").count()
-    assert done1 > 0
-
-    # same store, different geometry — bucket count AND per-bucket sizing
-    eng2 = CrawlEngine(spark, root, per_host_budget=10, n_bloom_buckets=8,
-                       bloom_capacity_per_bucket=50_000)
-    seen = eng2.io.read("url_seen")
-    rebuilt = eng2._bloom(seen)
-    assert B.bloom_geometry(rebuilt) == (8, eng2._bloom_m, eng2._bloom_k)
-
-    # engine keeps crawling under the new geometry: commits don't wedge
-    # and no URL is ever fetched twice across the geometry change
-    eng2.run(max_rounds=30)
-    pages = eng2.io.read("pages")
-    assert pages.count() > done1
-    assert (pages.groupBy("canonical_url").count()
-            .filter("count > 1").count()) == 0
-    # the committed filter now carries the new stamp
-    assert B.bloom_geometry(eng2.io.read("bloom")) == (
-        8, eng2._bloom_m, eng2._bloom_k)
-
-
 def test_surt_key_edges(spark):
     from pyspark.sql import functions as F
 
@@ -508,9 +402,8 @@ def test_engine_vacuum_preserves_resume_state(spark, tmp_path):
     frontier_before = eng.io.read("frontier").count()
 
     stats = eng.vacuum(keep_last=1)
-    # frontier/bloom overwrite per round -> their round-0 dirs reclaimed
+    # frontier is overwritten every round -> its round-0 dirs reclaimed
     assert stats["frontier"]["removed_dirs"]
-    assert stats["bloom"]["removed_dirs"]
     # with every table-writing option on, the store holds exactly the
     # declared tables (bootstrap + one round's commit set) and vacuum
     # visits each of them
@@ -905,7 +798,7 @@ def test_crash_after_pages_commit_replays_identically(spark, tmp_path):
     def crash_and_resume(root, keep_tables):
         crashed = mk(root)
         crashed.run(max_rounds=3)
-        for t in ("sig_index", "links", "url_seen", "bloom",
+        for t in ("sig_index", "links", "url_seen",
                   "crawl_log", "frontier"):
             if t not in keep_tables:
                 _rollback_to_round(crashed.io, t, 0)
@@ -1009,7 +902,7 @@ def test_archive_heals_crash_window(spark, tmp_path):
     crashed = mk(tmp_path / "c")
     crashed.run(max_rounds=3)
     # crash window: round-1 pages landed, everything after was lost
-    for t in ("warc_segments", "url_seen", "bloom", "crawl_log",
+    for t in ("warc_segments", "url_seen", "crawl_log",
               "frontier"):
         _rollback_to_round(crashed.io, t, 0)
     del crashed
@@ -1409,7 +1302,7 @@ def test_revisit_loop_backoff_and_refetch(spark, tmp_path):
 
 
 def test_revisit_transition_crash_heals(spark, tmp_path):
-    """Crash inside schedule_revisits (frontier committed, url_seen/bloom/
+    """Crash inside schedule_revisits (frontier committed, url_seen/
     crawl_log lost): run() detects the frontier round past last_round and
     idempotently re-runs the transition — the healed store matches an
     uninterrupted run table-for-table."""
@@ -1427,10 +1320,10 @@ def test_revisit_transition_crash_heals(spark, tmp_path):
     crashed = mk(tmp_path / "c")
     crashed.run(max_rounds=20, refresh_cycles=1)
     # crash window: transition round 2 wrote frontier, everything after
-    # was lost (url_seen/bloom/crawl_log roll back to drained round 1,
+    # was lost (url_seen/crawl_log roll back to drained round 1,
     # frontier to the transition's own snapshot)
     _rollback_to_round(crashed.io, "frontier", 2)
-    for t in ("url_seen", "bloom", "crawl_log"):
+    for t in ("url_seen", "crawl_log"):
         _rollback_to_round(crashed.io, t, 1)
     # pages/fetch_history of the post-transition rounds are also gone
     for t in ("pages", "fetch_history"):
@@ -1541,11 +1434,10 @@ def test_retry_mode_retries_transients_and_drains(spark, tmp_path):
     """retry_failed=True: a transiently-failed fetch stays OUT of url_seen
     and IN the frontier, re-attempts after an exponential backoff window
     (due = round + backoff * 2^attempt), and a url enters url_seen only
-    when it succeeds or exhausts max_attempts. The committed pages table
+    when it succeeds or exhausts MAX_ATTEMPTS. The committed pages table
     carries every attempt (attempt column dense 0..n-1 per url)."""
     eng = CrawlEngine(spark, str(tmp_path / "r"), per_host_budget=BUDGET,
-                      retry_failed=True, max_attempts=3,
-                      retry_backoff_rounds=1)
+                      retry_failed=True)
     eng.bootstrap(make_seeds(spark), make_robots(spark))
     stats = eng.run(max_rounds=40)
     # drained: only the robots-blocked /private seeds stay pending
@@ -1592,8 +1484,7 @@ def test_retry_mode_kill_resume_identical(spark, tmp_path):
     row), seen set, and final retry state."""
     def mk(root):
         e = CrawlEngine(spark, str(root), per_host_budget=BUDGET,
-                        retry_failed=True, max_attempts=3,
-                        retry_backoff_rounds=1)
+                        retry_failed=True)
         e.bootstrap(make_seeds(spark), make_robots(spark))
         return e
 
@@ -1604,8 +1495,7 @@ def test_retry_mode_kill_resume_identical(spark, tmp_path):
     part.run_round(0)
     del part
     resumed = CrawlEngine(spark, str(tmp_path / "part"),
-                          per_host_budget=BUDGET, retry_failed=True,
-                          max_attempts=3, retry_backoff_rounds=1)
+                          per_host_budget=BUDGET, retry_failed=True)
     assert resumed.last_round() == 0
     resumed.run(max_rounds=40)
 
@@ -1619,15 +1509,14 @@ def test_retry_mode_kill_resume_identical(spark, tmp_path):
 
 def test_retry_crash_after_pages_commit_heals(spark, tmp_path):
     """Worst crash window under retry mode: round 1's pages committed,
-    url_seen/retries/bloom/crawl_log/frontier lost. The replay path must
+    url_seen/retries/crawl_log/frontier lost. The replay path must
     re-derive the retry transitions from the committed attempt column —
     healed store byte-identical to an uninterrupted run."""
     seeds = _one_host_seeds(spark, list(range(40)))
 
     def mk(root):
         e = CrawlEngine(spark, str(root), per_host_budget=20,
-                        retry_failed=True, max_attempts=3,
-                        retry_backoff_rounds=1)
+                        retry_failed=True)
         e.bootstrap(seeds, _hostq_robots(spark))
         return e
 
@@ -1637,12 +1526,11 @@ def test_retry_crash_after_pages_commit_heals(spark, tmp_path):
     crashed = mk(tmp_path / "c")
     crashed.run_round(0)
     crashed.run_round(1)
-    for t in ("url_seen", "retries", "bloom", "crawl_log", "frontier"):
+    for t in ("url_seen", "retries", "crawl_log", "frontier"):
         _rollback_to_round(crashed.io, t, 0)
     del crashed
     resumed = CrawlEngine(spark, str(tmp_path / "c"), per_host_budget=20,
-                          retry_failed=True, max_attempts=3,
-                          retry_backoff_rounds=1)
+                          retry_failed=True)
     assert resumed.last_round() == 0
     resumed.run(max_rounds=20)
 
@@ -2018,7 +1906,7 @@ def test_archive_dedup_heals_digest_commit_crash(spark, tmp_path):
     # the round's LAST commit)
     _rollback_to_round(crashed.io, "archive_digests", 0)
     _rollback_to_round(crashed.io, "fetch_history", 0)
-    for t in ("url_seen", "bloom", "crawl_log", "frontier"):
+    for t in ("url_seen", "crawl_log", "frontier"):
         _rollback_to_round(crashed.io, t, refetch_round - 1)
     del crashed
 

@@ -10,7 +10,8 @@ These pin the three 100×-scale fixes:
   to confine first-choice rows to m/n_buckets slots → ~10% insert failures
   at nominal load and silent probe misses for bare build+probe callers.
 - salted per-host budget must select exactly min(budget, pending) per
-  host, including budget % n_salts != 0 (ceil rounding used to overshoot).
+  host, including budget % n_salts != 0 (ceil rounding used to overshoot),
+  and exactly the urls, in the fetch order, that the unsalted path picks.
 """
 
 import numpy as np
@@ -97,17 +98,21 @@ def test_cuckoo_row_choice_decorrelated_from_bucket():
     assert CK._probe_table(t, h, m).all()
 
 
-def test_salted_budget_selects_exactly_min_budget_pending(spark):
-    """Hot-host selection = min(budget, pending) per host, for budgets that
-    do and do not divide n_salts."""
+def _skewed_frontier(spark):
     rows = []
     for host, n_pending in (("hot.example", 400), ("mid.example", 7),
                             ("cold.example", 2)):
         for i in range(n_pending):
             rows.append((host, i % 10, f"https://{host}/{i:05d}"))
-    frontier = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "host string, priority int, canonical_url string") \
         .withColumn("warc_ts", F.to_timestamp(F.lit("2026-01-01")))
+
+
+def test_salted_budget_selects_exactly_min_budget_pending(spark):
+    """Hot-host selection = min(budget, pending) per host, for budgets that
+    do and do not divide n_salts."""
+    frontier = _skewed_frontier(spark)
     for budget in (5, 8, 16):          # 5 % 8 != 0 is the overshoot case
         batch = select_round_batch(frontier, per_host_budget=budget,
                                    hot_host_threshold=100, n_salts=8)
@@ -117,3 +122,18 @@ def test_salted_budget_selects_exactly_min_budget_pending(spark):
         assert counts["hot.example"] == budget
         assert counts["mid.example"] == min(budget, 7)
         assert counts["cold.example"] == 2
+
+
+def test_salted_batch_equals_unsalted_batch(spark):
+    """Salting only spreads the selection shuffle: the salted batch is the
+    host's top ``budget`` by the round order, row for row and fetch_slot
+    for fetch_slot, exactly what the unsalted path selects."""
+    frontier = _skewed_frontier(spark)
+    cols = ["host", "fetch_slot", "canonical_url", "priority"]
+    for budget in (5, 8, 16):
+        plain = select_round_batch(frontier, per_host_budget=budget)
+        salted = select_round_batch(frontier, per_host_budget=budget,
+                                    hot_host_threshold=100, n_salts=8)
+        want = sorted(map(tuple, plain.select(*cols).collect()))
+        got = sorted(map(tuple, salted.select(*cols).collect()))
+        assert got == want, budget

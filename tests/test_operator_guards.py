@@ -130,17 +130,6 @@ def test_cuckoo_probe_uses_stamped_geometry(spark):
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_merge_blooms_rejects_disjoint_bucket_drift(spark):
-    from python_web_scraper_cleaner_spark.operators.bloom import (
-        build_bloom, merge_blooms)
-    # two builds whose non-empty buckets are DISJOINT: the per-bucket
-    # check alone would never see both geometries in one group
-    a = build_bloom(_hashes(spark, [0]), n_buckets=64)      # bucket 0
-    b = build_bloom(_hashes(spark, [1]), n_buckets=128)     # bucket 1
-    with pytest.raises(ValueError, match="geometry drift"):
-        merge_blooms(a, b).count()
-
-
 # ---------------------------------------------------------------------------
 # focused_priority topic case-insensitivity
 # ---------------------------------------------------------------------------

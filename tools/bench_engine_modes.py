@@ -62,8 +62,7 @@ MODES = {
     # done-set filtering + ledger overwrite commit (~12.5% of fetches
     # fail transiently under the simulated seam and re-enter later
     # rounds, so n_fetched counts attempts, not urls)
-    "retry": {"retry_failed": True, "max_attempts": 3,
-              "retry_backoff_rounds": 1},
+    "retry": {"retry_failed": True},
     # aggressive URL canonicalization: tracking-param strip + param sort
     # on raw candidates at both ingestion points (pure projection)
     "strip_tracking": {"strip_tracking": True},
