@@ -29,6 +29,16 @@ html_cleaner_core.py:run_batch), re-expressed as north_rule demands:
       bytes), sig_index+r, links+r, url_seen+r, retries,
       fetch_history+r, frontier−batch, crawl_log+r (the resume marker)
 
+The round is one fixed skeleton (run_round / _fetch_round) over a
+RoundContext; CrawlEngine._stages, the one place a policy flag is read,
+plugs each enabled policy's stages in by name: gate (_trap_cap), J1 seen
+anti-join, unseen (_retry_gate), J3 robots, allowed (_adaptive_delay),
+select (_select, or _ranked_select in a rank mode), politeness schedule,
+fetch (simulated_fetch), fetched (_transient_failures, _directives,
+_harvest_links), _extract (text + lang), extracted (_c4, _near_dups), then
+the commit builders (_round_outputs plus _retries, _link_graph,
+_sig_index, _archive / _deduped_archive, _fetch_history).
+
 Every table commit is one TableIO snapshot per round, so a killed job
 resumes at the last committed round and — because every ordering derives
 from explicit sort keys — replays the exact same crawl order and URL-seen
@@ -43,18 +53,19 @@ pages table").
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import re as _re
 import time
-from typing import Iterator
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.udfs import with_clean_text
-from ..operators import frontier as FR
+from ..functions.udfs import extract_links_udf, lang_id_udf, with_clean_text
+from ..operators import dedup as D, frontier as FR, graph as G
 from ..sources.pages import page_record
 from ..sources.tableio import TableIO
 
@@ -96,6 +107,14 @@ _FETCH_EXTRA = [
 ]
 
 _DOCID_RE = _re.compile(r"/(\d+)\.html$")
+
+# pages' columns: every round's, then the optional ones the fetched
+# stages add (each present only when its stage ran), in this order
+PAGE_COLS = ("url", "canonical_url", "url_hash", "host", "priority",
+             "warc_ts", "round", "partition_id", "fetch_slot",
+             "scheduled_offset_ms", "fetch_ok", "text", "lang", "ok",
+             "extracted_chars", "error")
+STAGE_PAGE_COLS = ("noindex", "nofollow", "links", "attempt")
 
 # Fixed policy values, constants rather than options.
 DISCOVERY_PRIORITY = 9     # discovered links crawl after every seed
@@ -176,6 +195,15 @@ def canonicalize_seeds(seeds: DataFrame) -> DataFrame:
             .select(*[f.name for f in FRONTIER_SCHEMA]))
 
 
+def _capture(url: str) -> bytes | None:
+    """The simulated capture of ``url``: the deterministic corpus page its
+    trailing doc id names (sources/pages.page_record), or None when it
+    names none. The one seam the fetch stage and the archive builders
+    share; a real deployment captures the bytes inside the fetch task."""
+    m = _DOCID_RE.search(url)
+    return page_record(int(m.group(1)))["html"] if m else None
+
+
 def simulated_fetch(batch: DataFrame) -> DataFrame:
     """Fetch stage: groupBy(host).applyInPandas so one task owns one host and
     its pacing (SURVEY O4/S3). Rows are processed in fetch_slot order —
@@ -190,17 +218,10 @@ def simulated_fetch(batch: DataFrame) -> DataFrame:
 
     def fetch_host(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("fetch_slot").reset_index(drop=True)
-        htmls, oks = [], []
-        for url in pdf["url"]:
-            m = _DOCID_RE.search(url)
-            if m:
-                htmls.append(page_record(int(m.group(1)))["html"])
-                oks.append(True)
-            else:
-                htmls.append(None)
-                oks.append(False)
+        htmls = [_capture(url) for url in pdf["url"]]
         pdf["html"] = htmls
-        pdf["fetch_ok"] = pd.array(oks, dtype=bool)
+        pdf["fetch_ok"] = pd.array([h is not None for h in htmls],
+                                   dtype=bool)
         return pdf[cols]
 
     return batch.groupBy("host").applyInPandas(fetch_host, schema=out_schema)
@@ -209,18 +230,13 @@ def simulated_fetch(batch: DataFrame) -> DataFrame:
 @F.pandas_udf(T.StringType())
 def _capture_md5(urls: pd.Series) -> pd.Series:
     """md5 hex of the CAPTURE payload per url — the archival-dedup key.
-    In this sandbox the capture regenerates from the url via the same
-    deterministic seam _build_segments uses (sources/pages.page_record);
-    a real deployment hashes the fetched bytes inside the fetch task and
+    In this sandbox the capture regenerates from the url (_capture); a
+    real deployment hashes the fetched bytes inside the fetch task and
     commits the digest into pages. Arrow-batched, never per-row udf()."""
     import hashlib
 
-    out = []
-    for url in urls:
-        m = _DOCID_RE.search(url)
-        blob = page_record(int(m.group(1)))["html"] if m else b""
-        out.append(hashlib.md5(blob).hexdigest())
-    return pd.Series(out)
+    return pd.Series([hashlib.md5(_capture(url) or b"").hexdigest()
+                      for url in urls])
 
 
 def _observed_latency_ms(url_hash_col, host_col):
@@ -236,6 +252,51 @@ def _observed_latency_ms(url_hash_col, host_col):
     base = F.pmod(F.xxhash64(host_col), F.lit(900))
     jitter = F.pmod(F.xxhash64(url_hash_col), F.lit(400))
     return (base + jitter).cast("long")
+
+
+def _chain(stages, df: DataFrame, *args) -> DataFrame:
+    """Run frame stages in order: ``df = stage(*args, df)`` for each."""
+    for stage in stages:
+        df = stage(*args, df)
+    return df
+
+
+class RoundContext:
+    """What one round's stages share: its id, the pending frontier (as
+    the gate stages leave it), whether the round replays its committed
+    pages, the committed retry state (read once, on first use), and the
+    signature-index gap repair the near-dup stage computes for the
+    sig_index commit."""
+
+    def __init__(self, io: TableIO, round_id: int, pending: DataFrame,
+                 replay: bool) -> None:
+        self.io, self.id, self.pending, self.replay = (
+            io, round_id, pending, replay)
+        self.sig_repair: DataFrame | None = None
+
+    @functools.cached_property
+    def retries(self) -> DataFrame:
+        return self.io.read_or_empty("retries", RETRY_SCHEMA)
+
+
+_stage_list = functools.partial(dataclasses.field, default_factory=list)
+
+
+@dataclasses.dataclass
+class RoundStages:
+    """A round's policy stages, by the point of the fixed round skeleton
+    they join (CrawlEngine._stages fills it). Frame stages take
+    ``(rnd, df)`` and return the new frame; each list runs in order."""
+    select: Callable                  # allowed urls → the round's batch
+    gate: list = _stage_list()        # (rnd) → (stat, thunk); edit pending
+    unseen: list = _stage_list()      # after the seen anti-join
+    allowed: list = _stage_list()     # after the robots filter
+    fetched: dict = dataclasses.field(default_factory=dict)  # after fetch
+    extracted: list = _stage_list()   # after extract and lang
+    stats: list = _stage_list()       # count columns over the round frame
+    done: list = _stage_list()        # pages → the urls the round finished
+    grow: list = _stage_list()        # (rnd, pages, frontier) → frontier
+    commits: list = _stage_list()     # (rnd, pages, out) → {table: builder}
 
 
 class CrawlEngine:
@@ -263,6 +324,17 @@ class CrawlEngine:
                  c4_filter: bool = False,
                  c4_min_sentences: int = 3,
                  honor_directives: bool = False) -> None:
+        # every count option is >= 1 (None: off). A budget or salt count
+        # of 0 would select nothing (or take pmod by 0 in the salt hash):
+        # run() would stop after one empty round, frontier still pending
+        for name, value in (
+                ("per_host_budget", per_host_budget), ("n_salts", n_salts),
+                ("rank_refresh_every", rank_refresh_every),
+                ("archive_pages_per_segment", archive_pages_per_segment),
+                ("trap_variant_cap", trap_variant_cap),
+                ("round_ms", round_ms)):
+            if value is not None and value < 1:
+                raise ValueError(f"{name} must be >= 1")
         self.spark = spark
         self.io = TableIO(spark, root)
         self.per_host_budget = per_host_budget
@@ -299,7 +371,6 @@ class CrawlEngine:
         if priority_mode not in ("static", "pagerank", "opic", "trustrank"):
             raise ValueError(f"unknown priority_mode {priority_mode!r}")
         self.priority_mode = priority_mode
-        self._rank_mode = priority_mode != "static"
         # Rank refresh cadence: round r ranks over the links committed
         # BEFORE basis = r - (r % K). At 10^10 urls re-ranking the whole
         # accumulated graph every round is the dominant scheduler cost;
@@ -308,11 +379,8 @@ class CrawlEngine:
         # each round pays only the 8-byte-key join. Resume-deterministic
         # at any K: the basis is a pure function of the round id and the
         # committed links table (rows are round-stamped).
-        if rank_refresh_every < 1:
-            raise ValueError("rank_refresh_every must be >= 1")
         self.rank_refresh_every = rank_refresh_every
         self._rank_cache: tuple | None = None  # (basis, persisted ranks)
-        self._harvest_links = discover_links or self._rank_mode
         # Per-round near-dup dedup against a PERSISTED MinHash signature
         # index (VERDICT r4 #2): each round probes the new batch against
         # the `sig_index` table (operators/dedup.minhash_lsh_probe_index),
@@ -327,8 +395,6 @@ class CrawlEngine:
         # commit set as the round's tables (sources/warc.py writers,
         # gzip-member framing, the real CC layout).
         self.archive = archive
-        if archive_pages_per_segment < 1:
-            raise ValueError("archive_pages_per_segment must be >= 1")
         self.archive_pages_per_segment = archive_pages_per_segment
         # Archival payload dedup (ISO 28500 §6.7.2, what Common Crawl
         # does at write time): maintain an `archive_digests` table of
@@ -353,8 +419,6 @@ class CrawlEngine:
         # enforcement half of operators/frontier.url_trap_signals /
         # cap_trap_variants — a crawler abandons a calendar, it doesn't
         # queue it forever)
-        if trap_variant_cap is not None and trap_variant_cap < 1:
-            raise ValueError("trap_variant_cap must be >= 1")
         self.trap_variant_cap = trap_variant_cap
         # Adaptive politeness: adaptive_delay=True raises each host's
         # effective crawl delay to max(robots Crawl-delay, 1.5 × observed
@@ -366,8 +430,6 @@ class CrawlEngine:
         # budgets delay-aware (select_round_batch round_ms semantics: a
         # host that asks for d ms absorbs at most round_ms/d fetches).
         self.adaptive_delay = adaptive_delay
-        if round_ms is not None and round_ms < 1:
-            raise ValueError("round_ms must be >= 1")
         self.round_ms = round_ms
         # Transient-failure retry: retry_failed=True stops treating a
         # failed fetch as permanent. Failed urls stay OUT of url_seen and
@@ -421,26 +483,23 @@ class CrawlEngine:
         # the fetched html, so replay/resume stay byte-identical.
         self.honor_directives = honor_directives
 
-    def _strip_tracking(self, seeds: DataFrame) -> DataFrame:
-        """Apply aggressive param-strip canonicalization to raw seed rows
-        (url, priority, discovered_ts) — no-op unless strip_tracking."""
-        if not self.strip_tracking:
-            return seeds
-        cols = seeds.columns
-        return (FR.url_tracking_canonical(seeds, url_col="url")
-                .withColumn("url", F.col("canon_url"))
-                .select(*cols))
-
-    def _ingest_gate(self, frontier: DataFrame) -> DataFrame:
-        """Apply the URL pre-fetch filter to FRONTIER_SCHEMA rows (no-op
-        unless url_filter=True). Runs on canonical_url — post-
+    def _ingest(self, raw: DataFrame) -> DataFrame:
+        """Candidate urls (url, priority, discovered_ts) → FRONTIER_SCHEMA
+        rows — the one way a url enters the frontier (bootstrap seeds,
+        discovered links): the tracking-param strip (strip_tracking), the
+        lossless canonicalization, then the url pre-fetch filter
+        (url_filter). The filter runs on canonical_url — post-
         normalization, so an uppercased blockword or a default-port
         variant cannot sneak past the lexical gate."""
+        if self.strip_tracking:
+            raw = (FR.url_tracking_canonical(raw, url_col="url")
+                   .withColumn("url", F.col("canon_url"))
+                   .select(*raw.columns))
+        frontier = canonicalize_seeds(raw)
         if not self.url_filter:
             return frontier
-        cols = frontier.columns
         return (FR.url_prefilter(frontier, url_col="canonical_url")
-                .filter(F.col("keep")).select(*cols))
+                .filter(F.col("keep")).select(*frontier.columns))
 
     # -- lifecycle ------------------------------------------------------------
     def bootstrap(self, seeds: DataFrame | None = None,
@@ -502,8 +561,7 @@ class CrawlEngine:
             seeds = (doc_seeds if seeds is None
                      else seeds.select("url", "priority", "discovered_ts")
                      .unionByName(doc_seeds))
-        frontier = self._ingest_gate(
-            canonicalize_seeds(self._strip_tracking(seeds)))
+        frontier = self._ingest(seeds)
         self.io.overwrite(frontier, "frontier", round_id=-1)
         self.io.overwrite(robots, "robots", round_id=-1)
         # the vetted seed identity, durable: trustrank teleports to this
@@ -533,7 +591,6 @@ class CrawlEngine:
         three share the two-shuffles-per-iteration integer profile
         (operators/graph.py)."""
         from ..caching import bounded_persist
-        from ..operators import graph as G
 
         if self._rank_cache is not None and self._rank_cache[0] == basis:
             return self._rank_cache[1]
@@ -587,59 +644,6 @@ class CrawlEngine:
         return G.pagerank_fixed_point(edges, nodes, n_nodes=n,
                                       iters=PAGERANK_ITERS)
 
-    def _apply_priority(self, allowed: DataFrame, round_id: int):
-        """Compose the round's dynamic fetch ordering (any rank mode):
-        never-fetched first (revisit due-ness from an optional
-        ``fetch_history`` table second), then link-centrality rank —
-        pagerank / opic / trustrank per priority_mode — over the
-        committed ``links`` graph as of the refresh basis (see
-        _ranks_at_basis), then the static FRONTIER_ORDER as the
-        deterministic tiebreak — the exact composition proven
-        oracle-green by the `frontier_priority` registry entry
-        (plans/queries.py:q_frontier_priority; the trustrank/opic
-        centralities by `link_trustrank` / `frontier_opic`).
-
-        Returns (frontier_with_rank_cols, order_exprs | None,
-        helper_cols_to_drop). Every input is a committed table, so a
-        resumed engine recomputes the identical ordering (north_rule).
-
-        Scale shape: every centrality is 2 shuffles/iteration on 8-byte
-        keys (operators/graph.py), amortized over rank_refresh_every
-        rounds; the rank and due-ness joins are id-keyed; nothing
-        touches html/text."""
-        if not self._rank_mode:
-            return allowed, None, []
-        io = self.io
-        basis = round_id - (round_id % self.rank_refresh_every)
-        ranks = self._ranks_at_basis(basis)
-        if ranks is not None:
-            allowed = (allowed.join(
-                ranks.select(F.col("id").alias("url_hash"), "rank_fp"),
-                "url_hash", "left")
-                .withColumn("rank_fp", F.coalesce(
-                    F.col("rank_fp"), F.lit(0).cast("long"))))
-        else:
-            allowed = allowed.withColumn("rank_fp", F.lit(0).cast("long"))
-        if io.exists("fetch_history"):
-            # SAME backoff clock as schedule_revisits, or the fetch order
-            # diverges from the schedule it claims to compose
-            rev = FR.revisit_schedule(io.read("fetch_history"))
-            allowed = allowed.join(
-                rev.select(F.col("page_id").alias("url_hash"),
-                           F.col("next_interval_hours").alias("_due_h")),
-                "url_hash", "left")
-        else:
-            allowed = allowed.withColumn("_due_h",
-                                         F.lit(None).cast("long"))
-        allowed = (allowed
-                   .withColumn("never_fetched", F.col("_due_h").isNull())
-                   .withColumn("due_h", F.coalesce(
-                       F.col("_due_h"), F.lit(0).cast("long")))
-                   .drop("_due_h"))
-        order = [F.desc("never_fetched"), F.asc("due_h"),
-                 F.desc("rank_fp")] + FR.order_exprs(None)
-        return allowed, order, ["never_fetched", "due_h", "rank_fp"]
-
     @staticmethod
     def _corpus_view(df: DataFrame) -> DataFrame:
         """THE corpus-membership filter — the single definition of which
@@ -652,12 +656,10 @@ class CrawlEngine:
         adding the next exclusion flag happens HERE, nowhere else, so
         the three views can never silently disagree."""
         out = df.filter(F.col("ok"))
-        if "near_dup" in df.columns:
-            out = out.filter(~F.col("near_dup"))
-        if "c4_kept" in df.columns:
-            out = out.filter(F.col("c4_kept"))
-        if "noindex" in df.columns:
-            out = out.filter(~F.col("noindex"))
+        for flag, keep in (("near_dup", False), ("c4_kept", True),
+                           ("noindex", False)):
+            if flag in df.columns:
+                out = out.filter(F.col(flag) if keep else ~F.col(flag))
         return out
 
     def _sig_state(self):
@@ -668,14 +670,12 @@ class CrawlEngine:
         banding ONLY the gap rounds' kept docs — bounded re-shingling,
         never the whole corpus. The repair bands join this round's
         append so the store heals."""
-        from ..operators import dedup as D
         io = self.io
         if not io.exists("pages"):
             return None, None
         committed = io.read("pages")
         kept = self._corpus_view(committed)
-        sig_r = io.latest_round("sig_index") if io.exists("sig_index") \
-            else None
+        sig_r = io.latest_round("sig_index")
         index = io.read("sig_index") if sig_r is not None else None
         if sig_r == io.latest_round("pages"):
             return index, None
@@ -688,32 +688,6 @@ class CrawlEngine:
             band_size=self._sig_band).localCheckpoint(eager=True)
         index = repair if index is None else index.unionByName(repair)
         return index, repair
-
-    def _flag_near_dups(self, pages: DataFrame, index_bands) -> DataFrame:
-        """Probe this round's extracted batch against the signature index
-        and flag near-dups (kept in the pages sink for audit; excluded
-        from the index and from the corpus view). Probe cost scales with
-        the batch — the index text is consulted only for candidate docs
-        (minhash_lsh_probe_index's left_semi verify)."""
-        from ..operators import dedup as D
-        if index_bands is None:
-            return pages.withColumn("near_dup", F.lit(False))
-        # corpus-excluded pages (c4-dropped, noindexed) never enter the
-        # corpus — skip their probe; the in-flight batch has no near_dup
-        # column yet, which _corpus_view tolerates
-        new_docs = self._corpus_view(pages).select("url_hash", "text")
-        index_docs = self._corpus_view(self.io.read("pages"))
-        pairs = D.minhash_lsh_probe_index(
-            index_bands, index_docs.select("url_hash", "text"), new_docs,
-            id_col="url_hash", text_col="text", k=self._sig_k,
-            n_hashes=self._sig_hashes, band_size=self._sig_band,
-            threshold=DEDUP_THRESHOLD)
-        dup_ids = (pairs.select(F.col("id_b").alias("url_hash"))
-                   .distinct().withColumn("_nd", F.lit(True)))
-        return (pages.join(dup_ids, "url_hash", "left")
-                .withColumn("near_dup",
-                            F.coalesce(F.col("_nd"), F.lit(False)))
-                .drop("_nd"))
 
     ARCHIVE_SCHEMA = T.StructType([
         T.StructField("round", T.IntegerType(), nullable=False),
@@ -792,10 +766,10 @@ class CrawlEngine:
         per-host slots bound every segment at N records with NO global
         window or extra shuffle beyond the one groupBy; blobs are built
         and stay inside the Arrow stage. In this sandbox html regenerates
-        from the url via the deterministic simulated-fetch seam
-        (sources/pages.page_record — same seam simulated_fetch uses); in
-        a real deployment the capture is taken inside the fetch task and
-        this builder consumes the fetch cache instead."""
+        from the url via the simulated-capture seam (_capture — the one
+        simulated_fetch uses); in a real deployment the capture is taken
+        inside the fetch task and this builder consumes the fetch cache
+        instead."""
         from ..sources.warc import (build_revisit_record, build_warc_record,
                                     build_warcinfo, build_wet_record,
                                     gzip_member)
@@ -812,10 +786,9 @@ class CrawlEngine:
             # stub) joined on the round-unique url key
             src = src.join(plan, "url", "left")
         else:
-            src = (src.withColumn("record_type", F.lit("response"))
-                   .withColumn("digest", F.lit(None).cast("string"))
-                   .withColumn("refers_to_url", F.lit(None).cast("string"))
-                   .withColumn("refers_to_ts", F.lit(None).cast("string")))
+            src = src.withColumn("record_type", F.lit("response"))
+            for c in ("digest", "refers_to_url", "refers_to_ts"):
+                src = src.withColumn(c, F.lit(None).cast("string"))
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("fetch_slot").reset_index(drop=True)
@@ -830,10 +803,8 @@ class CrawlEngine:
                         row.refers_to_ts, row.digest)))
                     n_revisit += 1
                 else:
-                    m = _DOCID_RE.search(row.url)
-                    html = page_record(int(m.group(1)))["html"]
-                    warc_parts.append(gzip_member(
-                        build_warc_record(row.url, row.ts, html)))
+                    warc_parts.append(gzip_member(build_warc_record(
+                        row.url, row.ts, _capture(row.url))))
                     n_warc += 1
                 if row.ok:
                     wet_parts.append(gzip_member(
@@ -972,326 +943,61 @@ class CrawlEngine:
         r = self.io.latest_round(name)
         return r is not None and r >= round_id
 
-    def _fetch_round(self, pending: DataFrame, retries,
-                     round_id: int) -> tuple:
-        """Select, fetch and extract this round's batch: (pages frame,
-        signature-index repair bands | None)."""
-        io = self.io
-        sig_repair = None
-        # J1: one exact left_anti join of the pending frontier against
-        # url_seen — the only seen-url check, so it covers every way a
-        # url enters the frontier (discovery, re-seeding, revisit)
-        seen = io.read_or_empty("url_seen", SEEN_SCHEMA)
-        fresh = pending.join(seen.select("url_hash"), "url_hash", "left_anti")
-        if self.retry_failed:
-            # retry gate: join per-url attempt state; urls whose
-            # backoff window is still open sit this round out (they
-            # stay in the frontier — only selection skips them).
-            # 8-byte-key left join with a small build side.
-            fresh = (fresh.join(retries, "url_hash", "left")
-                     .withColumn("attempt",
-                                 F.coalesce(F.col("attempt"), F.lit(0)))
-                     .filter(F.col("due_round").isNull()
-                             | (F.col("due_round") <= F.lit(round_id)))
-                     .drop("due_round"))
-
-        # J3 + O4: robots filter, dynamic priority (pagerank mode),
-        # per-host budget, politeness schedule
-        allowed = FR.apply_robots(fresh, io.read("robots"))
-        if self.adaptive_delay and io.exists("pages"):
-            # observed-latency backoff: raise each host's effective
-            # delay to max(robots, 1.5 × p95 observed). Derived from
-            # committed pages only (prior rounds) via the pure
-            # latency function — replay-safe with no new table. The
-            # estimate is host-cardinality → broadcast.
-            hist = (io.read("pages")
-                    .select("host", _observed_latency_ms(
-                        F.col("url_hash"), F.col("host"))
-                        .alias("latency_ms")))
-            est = FR.estimate_crawl_delays(hist).select(
-                "host", F.col("delay_ms").alias("_obs_delay_ms"))
-            allowed = (allowed
-                       .join(F.broadcast(est), "host", "left")
-                       .withColumn(
-                           "crawl_delay_ms",
-                           F.greatest(
-                               F.coalesce(F.col("crawl_delay_ms"),
-                                          F.lit(0)).cast("long"),
-                               F.coalesce(F.col("_obs_delay_ms"),
-                                          F.lit(0)).cast("long")))
-                       .drop("_obs_delay_ms"))
-        allowed, order_cols, rank_helper_cols = self._apply_priority(
-            allowed, round_id)
-        batch = FR.select_round_batch(
-            allowed, per_host_budget=self.per_host_budget,
-            hot_host_threshold=self.hot_host_threshold,
-            n_salts=self.n_salts, order_cols=order_cols,
-            round_ms=self.round_ms)
-        if rank_helper_cols:
-            batch = batch.drop(*rank_helper_cols)
-        # batch comes straight from select_round_batch — its
-        # fetch_slot IS the politeness rank, so the second window
-        # shuffle is skipped
-        sched = FR.politeness_schedule(batch, trust_existing_slot=True)
-
-        # S3 + F3: fetch (grouped per host) then vectorized
-        # extraction + deterministic language tagging (input_hint:
-        # extraction fills text AND lang; failed extractions tag
-        # 'und'); in discovery mode out-links are harvested from
-        # html BEFORE the binary column is dropped (links travel as
-        # a small array column, never the blob)
-        from ..functions.udfs import extract_links_udf, lang_id_udf
-        fetched = simulated_fetch(sched)
-        if self.retry_failed:
-            # transient-failure seam: a pure function of (url_hash,
-            # attempt), so attempt n and attempt n+1 are independent
-            # deterministic draws (~12.5% fail) and replay/repeat
-            # runs reproduce the identical outcome. A real fetcher
-            # deletes this expression and reports actual fetch_ok.
-            transient = (F.pmod(F.xxhash64(F.col("url_hash"),
-                                           F.col("attempt")),
-                                F.lit(8)) == 0)
-            fetched = (fetched
-                       .withColumn("fetch_ok",
-                                   F.col("fetch_ok") & ~transient)
-                       .withColumn("html",
-                                   F.when(F.col("fetch_ok"),
-                                          F.col("html"))))
-        extra_cols = []
-        if self.honor_directives:
-            noindex, nofollow = FR.meta_robots_flags(
-                F.col("html").cast("string"))
-            fetched = (fetched.withColumn("noindex", noindex)
-                       .withColumn("nofollow", nofollow))
-            extra_cols += ["noindex", "nofollow"]
-        if self._harvest_links:
-            links = extract_links_udf(F.col("html"), F.col("url"))
-            if self.honor_directives:
-                # nofollow: this page contributes NO discovery edges
-                links = (F.when(F.col("nofollow"),
-                                F.array().cast("array<string>"))
-                         .otherwise(links))
-            fetched = fetched.withColumn("links", links)
-            extra_cols += ["links"]
-        cleaned = with_clean_text(fetched, output_format="txt")
-        pages = (cleaned
-                 .withColumn("lang",
-                             F.when(F.col("ok"),
-                                    lang_id_udf(F.col("text")))
-                             .otherwise(F.lit("und")))
-                 .withColumn("round", F.lit(round_id))
-                 .withColumn("partition_id", F.spark_partition_id())
-                 .select("url", "canonical_url", "url_hash", "host",
-                         "priority", "warc_ts", "round",
-                         "partition_id", "fetch_slot",
-                         "scheduled_offset_ms", "fetch_ok", "text",
-                         "lang", "ok", "extracted_chars", "error",
-                         *extra_cols,
-                         *(["attempt"] if self.retry_failed else [])))
-        if self.c4_filter:
-            from ..operators.textstats import c4_kept_col
-            pages = pages.withColumn(
-                "c4_kept",
-                F.col("ok") & c4_kept_col(
-                    F.col("text"),
-                    min_words_per_line=C4_MIN_WORDS,
-                    min_sentences=self.c4_min_sentences))
-        if self.dedup_index:
-            # localCheckpoint, not persist: the probe + flag + every
-            # commit re-enter this frame, and a plain persist caches
-            # the DATA but not the analyzed plan — each consumer
-            # would re-analyze the whole round lineage (seen anti-join
-            # + rank join + windows + Arrow stages; measured ~+10
-            # s/round of pure driver time at a 2.6k-url demo round).
-            # The frame is batch-sized and html is already dropped,
-            # so truncating it to an RDD scan is cheap and every
-            # consumer plans in O(1) of the round plan. (Same
-            # medicine as the round-4 minhash_lsh_probe_index fix —
-            # see BASELINE.md.)
-            pages = pages.localCheckpoint(eager=True)
-            index_bands, sig_repair = self._sig_state()
-            pages = self._flag_near_dups(pages, index_bands)
-        return pages, sig_repair
-
-    def _round_outputs(self, pages: DataFrame, pending: DataFrame,
-                       retries, sig_repair, replay: bool,
-                       round_id: int) -> dict:
-        """The round's commit set as {table: zero-argument builder}, one
-        per ROUND_COMMITS table these options write. run_round calls a
-        builder right before its commit, so it reads the tables committed
-        before it, and a guarded-off table costs nothing."""
-        io = self.io
-        out = {"pages": lambda: pages}
-        if self.archive:
-            # archival capture: WARC + WET segment blobs (see
-            # _build_segments). With archive_dedup the per-url plan, and
-            # the digest rows it elects, derive from archive_digests
-            # rounds < round_id, so BOTH commits replay identically no
-            # matter where a crash landed between them.
-            plan = None
-            if self.archive_dedup:
-                plan, new_digests = self._archive_plan(pages, round_id)
-                out["archive_digests"] = lambda: new_digests
-            out["warc_segments"] = lambda: self._build_segments(
-                pages, round_id, plan)
-
-        def sig_index():
-            # index maintenance: band ONLY this round's kept docs and
-            # APPEND (operators/dedup.append_to_signature_index
-            # semantics — near-dups never enter the index, the corpus
-            # is never re-shingled); committed AFTER pages with the same
-            # round id so a crash between the two commits is detected as
-            # a round-id gap and repaired by _sig_state.
-            if replay:
-                # _sig_state's gap repair already covers this (committed)
-                # round's kept docs — banding them again here would
-                # duplicate index rows
-                return self._sig_state()[1]
-            from ..operators import dedup as D
-            # fan the batch out before shingling: AQE coalesces the small
-            # round frame to ~1 partition (the checkpointed RDD inherits
-            # it), and the minhash CPU would run on one core otherwise —
-            # measured 33 s → ~3 s on the 7k-url demo round (same fix as
-            # q_dedup_incremental's index build, plans/queries.py)
-            par = self.spark.sparkContext.defaultParallelism
-            kept_new = (self._corpus_view(pages).select("url_hash", "text")
-                        .repartition(par, F.col("url_hash")))
-            bands = D.banded_signatures(
-                kept_new, "url_hash", "text", k=self._sig_k,
-                n_hashes=self._sig_hashes, band_size=self._sig_band)
-            return (bands if sig_repair is None
-                    else sig_repair.unionByName(bands))
-
-        if self.dedup_index:
-            out["sig_index"] = sig_index
-
-        def links():
-            # grow the committed link graph: (fetching page → link
-            # target) as 8-byte hash edges, distinct per round. The NEXT
-            # round's _apply_priority ranks over it.
-            from .queries import _canonicalize as _canon
-            harvested = (pages.filter("fetch_ok")
-                         .select(F.col("url_hash").alias("src_hash"),
-                                 F.explode("links").alias("url")))
-            return (_canon(harvested)
-                    .select("src_hash",
-                            F.xxhash64("canonical_url").alias("dst_hash"))
-                    .distinct()
-                    .withColumn("round", F.lit(round_id).cast("int")))
-
-        if self._rank_mode:
-            out["links"] = links
-
-        # retry mode: a transiently-failed url with attempts left is NOT
-        # done — it stays out of url_seen (and in the frontier) until it
-        # succeeds or exhausts MAX_ATTEMPTS. `done` is the membership set
-        # every downstream commit keys on.
-        if self.retry_failed:
-            done = pages.filter(
-                F.col("fetch_ok")
-                | (F.col("attempt") + 1 >= F.lit(MAX_ATTEMPTS)))
-        else:
-            done = pages
-        new_seen = done.select(
-            "url_hash", "canonical_url",
-            F.lit(round_id).cast("int").alias("first_seen_round"))
-        out["url_seen"] = lambda: new_seen
-
-        @functools.cache
-        def remaining():
-            # frontier advance: only DONE urls leave the pending set (==
-            # all fetched urls outside retry mode) — a retryable failure
-            # stays in the frontier, gated by the retries table at the
-            # next selection
-            rem = pending.join(done.select("canonical_url"),
-                               "canonical_url", "left_anti")
-            if not self.discover_links:
-                return rem
-            # grow the frontier: harvested links − (already seen ∪
-            # already pending). Deterministic: fixed discovery priority,
-            # discovered_ts = this round's id as seconds — same inputs
-            # always yield the same frontier state.
-            discovered = (pages
-                          .select(F.explode("links").alias("url"))
-                          .distinct()
-                          .withColumn("priority",
-                                      F.lit(DISCOVERY_PRIORITY).cast("int"))
-                          .withColumn(
-                              "discovered_ts",
-                              F.to_timestamp(F.lit("2026-06-01"))
-                              + F.make_interval(secs=F.lit(round_id))))
-            fresh = self._ingest_gate(
-                canonicalize_seeds(self._strip_tracking(discovered)))
-            # built AFTER the url_seen commit (it follows url_seen in
-            # ROUND_COMMITS) so this round's done urls are excluded
-            # (TableIO.read pins the snapshot)
-            known_seen = io.read("url_seen").select("canonical_url")
-            fresh = (fresh
-                     .join(known_seen, "canonical_url", "left_anti")
-                     .join(rem.select("canonical_url"),
-                           "canonical_url", "left_anti"))
-            return rem.unionByName(fresh)
-
-        out["frontier"] = remaining
-
-        def merged_retries():
-            # retries' = (old − urls fetched this round) ∪ next attempts,
-            # kept ONLY for urls still in the frontier. Idempotent on
-            # replay: next ⊆ this round's urls, so re-deriving from the
-            # post-crash table lands on the same rows. Backoff is
-            # exponential in attempts consumed: due = round +
-            # backoff·2^attempt. The frontier semi-join purges orphans —
-            # a retryable url later dropped from the frontier (trap-
-            # variant cap) would otherwise hold a retries row forever and
-            # pin run()'s idle-forward loop at max_rounds.
-            nxt = (pages.filter(~F.col("fetch_ok"))
-                   .filter(F.col("attempt") + 1 < F.lit(MAX_ATTEMPTS))
-                   .select(
-                       "url_hash",
-                       (F.col("attempt") + 1).cast("int").alias("attempt"),
-                       (F.lit(round_id)
-                        + F.lit(RETRY_BACKOFF_ROUNDS)
-                        * F.expr("shiftleft(1, attempt)"))
-                       .cast("int").alias("due_round")))
-            return (retries
-                    .join(pages.select("url_hash"), "url_hash", "left_anti")
-                    .unionByName(nxt)
-                    .join(remaining().select("url_hash"),
-                          "url_hash", "left_semi"))
-
-        if self.retry_failed:
-            out["retries"] = merged_retries
-
-        if self.revisit:
-            # re-crawl substrate: per-fetch change observations
-            out["fetch_history"] = lambda: self._build_fetch_history(
-                pages, round_id)
-        # K3: per-partition lineage/metrics (manifest analog) — the
-        # resume marker
-        out["crawl_log"] = lambda: (
-            pages.groupBy("round", "partition_id")
-            .agg(F.count("*").alias("n_urls"),
-                 F.sum(F.col("ok").cast("int")).alias("n_ok"),
-                 F.sum((~F.col("ok")).cast("int")).alias("n_err"),
-                 F.sum("extracted_chars").alias("extracted_chars"))
-            .withColumn("wall_ts", F.lit(time.time()).cast("double")))
-        return out
-
     # -- one round -------------------------------------------------------------
-    def run_round(self, round_id: int) -> dict:
-        io = self.io
-        pending = io.read("frontier")
-        trap_dropped = None
+    def _stages(self) -> RoundStages:
+        """The round's policy stages — the one place a round-policy flag is
+        read. run_round's skeleton is fixed; each enabled policy plugs its
+        stages in at the points named here, in the order added. No stage
+        body reads another policy's flag."""
+        st = RoundStages(select=self._select)
         if self.trap_variant_cap is not None:
-            # applied to the COMMITTED frontier before any other stage,
-            # so both the normal and WAL-replay paths see the same capped
-            # pending set (the drop re-derives identically on resume —
-            # it's a pure function of the committed frontier)
-            pending, trap_dropped = FR.cap_trap_variants(
-                pending, max_variants=self.trap_variant_cap)
-        retries = (io.read_or_empty("retries", RETRY_SCHEMA)
-                   if self.retry_failed else None)
+            st.gate.append(self._trap_cap)
+        if self.retry_failed:
+            st.unseen.append(self._retry_gate)
+            st.fetched["transient"] = self._transient_failures
+            st.done.append(self._retry_done)
+            st.commits.append(self._retries)
+        if self.adaptive_delay:
+            st.allowed.append(self._adaptive_delay)
+        nofollow = F.lit(False)
+        if self.honor_directives:
+            st.fetched["directives"] = self._directives
+            st.stats += [F.count_if("noindex").alias("n_noindex"),
+                         F.count_if("nofollow").alias("n_nofollow")]
+            nofollow = F.col("nofollow")
+        # the rank modes and discovery share the one links stage
+        harvest = functools.partial(self._harvest_links, nofollow=nofollow)
+        if self.priority_mode != "static":
+            st.select = self._ranked_select
+            st.fetched["links"] = harvest
+            st.commits.append(self._link_graph)
+        if self.discover_links:
+            st.fetched["links"] = harvest
+            st.grow.append(self._discovered)
+        if self.c4_filter:
+            st.extracted.append(self._c4)
+            st.stats.append(F.count_if(F.col("ok") & ~F.col("c4_kept"))
+                            .alias("n_c4_dropped"))
+        if self.dedup_index:
+            st.extracted.append(self._near_dups)
+            st.stats.append(F.count_if("near_dup").alias("n_near_dup"))
+            st.commits.append(self._sig_index)
+        if self.archive_dedup:     # __init__ checks it implies archive
+            st.commits.append(self._deduped_archive)
+        elif self.archive:
+            st.commits.append(self._archive)
+        if self.revisit:
+            st.commits.append(self._fetch_history)
+        return st
 
+    def run_round(self, round_id: int) -> dict:
+        """One round: gate the committed frontier, fetch the batch (or
+        replay it from committed pages), then commit ROUND_COMMITS.
+        Returns the round's stats."""
+        io, st = self.io, self._stages()
+        rnd = RoundContext(io, round_id, io.read("frontier"),
+                           self._committed("pages", round_id))
+        deferred = dict(gate(rnd) for gate in st.gate)
         # WAL-style replay: pages is the round's write-ahead record — it
         # commits FIRST. If a crash interrupted the rest of the commit
         # set (crawl_log not yet at round_id, so run() re-enters this
@@ -1303,59 +1009,410 @@ class CrawlEngine:
         # re-derivations are pure functions of committed state, so the
         # healed store is byte-identical to an uninterrupted run
         # (north_rule; tests/test_crawl_engine.py crash-window tests).
-        replay = self._committed("pages", round_id)
-        sig_repair = None
-        if replay:
-            pages = io.read("pages").filter(F.col("round") == round_id)
-        else:
-            pages, sig_repair = self._fetch_round(pending, retries,
-                                                  round_id)
+        pages = (io.read("pages").filter(F.col("round") == round_id)
+                 if rnd.replay else self._fetch_round(rnd, st))
         # one shuffle-free pass feeds the commits: cache the round result.
         # persist (NOT localCheckpoint) is deliberate here: the commit
         # consumers re-plan the round lineage, but with the static plan
         # that analysis is cheap, while a checkpointed RDD loses the
         # columnar cache + codegen scan and freezes the AQE-coalesced
         # partitioning — measured 4.4 s → 9.1 s on the 26k-url round.
-        # The dedup branch of _fetch_round checkpoints instead because
-        # its probe re-enters a much deeper plan (see that comment).
+        # The near-dup stage checkpoints instead because its probe
+        # re-enters a much deeper plan (see _near_dups).
         pages.persist()
         try:
             # every per-page count in one aggregate — the first action,
             # which also fills the cache the commits read
-            aggs = [F.count("*").alias("n_fetched")]
-            if self.dedup_index:
-                aggs.append(F.count_if("near_dup").alias("n_near_dup"))
-            if self.c4_filter:
-                aggs.append(F.count_if(F.col("ok") & ~F.col("c4_kept"))
-                            .alias("n_c4_dropped"))
-            if self.honor_directives:
-                aggs += [F.count_if("noindex").alias("n_noindex"),
-                         F.count_if("nofollow").alias("n_nofollow")]
-            counts = pages.agg(*aggs).first().asDict()
-
-            outputs = self._round_outputs(pages, pending, retries,
-                                          sig_repair, replay, round_id)
+            counts = pages.agg(F.count("*").alias("n_fetched"),
+                               *st.stats).first().asDict()
+            outputs = self._round_outputs(rnd, pages, st)
             for name, mode in ROUND_COMMITS:
                 if name not in outputs or (
                         mode == "append" and self._committed(name, round_id)):
                     continue
                 commit = io.append_round if mode == "append" else io.overwrite
                 commit(outputs[name](), name, round_id)
-
             # count the COMMITTED frontier (parquet metadata read) instead
             # of re-running the anti-join lineage a second time
             stats = {"round": round_id, "n_fetched": counts.pop("n_fetched"),
                      "n_remaining": io.read("frontier").count(), **counts}
-            if trap_dropped is not None:
-                # stat-only action: replays the cap pipeline once more
-                # (frontier scan + count agg + window over hot rows
-                # only). Inherent to lazy eval without persisting round
-                # state; the hot-row window input is trap paths only, so
-                # the recompute is bounded by the frontier scan itself.
-                stats["n_trap_dropped"] = trap_dropped.count()
+            stats.update((k, count()) for k, count in deferred.items())
         finally:
             pages.unpersist()
         return stats
+
+    def _fetch_round(self, rnd, st):
+        """The new-round path, pending → the round's pages frame: seen
+        anti-join (J1), [unseen], robots (J3), [allowed], select, schedule,
+        fetch (S3), [fetched], extract and lang (F3), [extracted]."""
+        # J1: one exact left_anti join of the pending frontier against
+        # url_seen — the only seen-url check, so it covers every way a
+        # url enters the frontier (discovery, re-seeding, revisit)
+        seen = self.io.read_or_empty("url_seen", SEEN_SCHEMA)
+        fresh = rnd.pending.join(seen.select("url_hash"), "url_hash",
+                                 "left_anti")
+        allowed = FR.apply_robots(_chain(st.unseen, fresh, rnd),
+                                  self.io.read("robots"))
+        batch = st.select(rnd, _chain(st.allowed, allowed, rnd))
+        # batch comes straight from select_round_batch — its
+        # fetch_slot IS the politeness rank, so the second window
+        # shuffle is skipped
+        sched = FR.politeness_schedule(batch, trust_existing_slot=True)
+        fetched = _chain(st.fetched.values(), simulated_fetch(sched), rnd)
+        return _chain(st.extracted, self._extract(rnd, fetched), rnd)
+
+    # -- stages, in dataflow order ------------------------------------------
+    def _trap_cap(self, rnd):
+        """gate (trap_variant_cap): at most N pending urls per (host, path)
+        enter a round; the overflow is dropped from the frontier. Applied
+        to the COMMITTED frontier before any other stage, so the new-round
+        and replay paths see the same capped pending set (the drop is a
+        pure function of the committed frontier). Returns its stat."""
+        rnd.pending, dropped = FR.cap_trap_variants(
+            rnd.pending, max_variants=self.trap_variant_cap)
+        # stat-only action, run after the commits: replays the cap
+        # pipeline once more (frontier scan + count agg + window over hot
+        # rows only). Inherent to lazy eval without persisting round
+        # state; the hot-row window input is trap paths only, so the
+        # recompute is bounded by the frontier scan itself.
+        return "n_trap_dropped", dropped.count
+
+    def _retry_gate(self, rnd, fresh):
+        """unseen (retry_failed): join per-url attempt state; urls whose
+        backoff window is still open sit this round out (they stay in the
+        frontier — only selection skips them). 8-byte-key left join with
+        a small build side."""
+        return (fresh.join(rnd.retries, "url_hash", "left")
+                .withColumn("attempt",
+                            F.coalesce(F.col("attempt"), F.lit(0)))
+                .filter(F.col("due_round").isNull()
+                        | (F.col("due_round") <= F.lit(rnd.id)))
+                .drop("due_round"))
+
+    def _adaptive_delay(self, rnd, allowed):
+        """allowed (adaptive_delay): observed-latency backoff — raise each
+        host's effective delay to max(robots, 1.5 × p95 observed), derived
+        from committed pages only (prior rounds) via the pure latency
+        function, so it is replay-safe with no new table. The estimate is
+        host-cardinality → broadcast."""
+        if not self.io.exists("pages"):
+            return allowed
+        hist = (self.io.read("pages")
+                .select("host", _observed_latency_ms(
+                    F.col("url_hash"), F.col("host")).alias("latency_ms")))
+        est = FR.estimate_crawl_delays(hist).select(
+            "host", F.col("delay_ms").alias("_obs_delay_ms"))
+        delay = F.greatest(*(F.coalesce(F.col(c), F.lit(0)).cast("long")
+                             for c in ("crawl_delay_ms", "_obs_delay_ms")))
+        return (allowed.join(F.broadcast(est), "host", "left")
+                .withColumn("crawl_delay_ms", delay).drop("_obs_delay_ms"))
+
+    def _select(self, rnd, allowed, order=None):
+        """select (O4): the per-host top-k batch under the politeness
+        budget, ordered by ``order`` (FRONTIER_ORDER when None)."""
+        return FR.select_round_batch(
+            allowed, per_host_budget=self.per_host_budget,
+            hot_host_threshold=self.hot_host_threshold,
+            n_salts=self.n_salts, order_cols=order, round_ms=self.round_ms)
+
+    def _ranked_select(self, rnd, allowed):
+        """priority + select (rank modes): compose the round's dynamic
+        fetch ordering — never-fetched first (revisit due-ness from an
+        optional ``fetch_history`` table second), then link-centrality
+        rank — pagerank / opic / trustrank per priority_mode — over the
+        committed ``links`` graph as of the refresh basis (see
+        _ranks_at_basis), then the static FRONTIER_ORDER as the
+        deterministic tiebreak — the exact composition proven
+        oracle-green by the `frontier_priority` registry entry
+        (plans/queries.py:q_frontier_priority; the trustrank/opic
+        centralities by `link_trustrank` / `frontier_opic`). The rank
+        columns exist only for the selection and are dropped after it.
+        Every input is a committed table, so a resumed engine recomputes
+        the identical ordering (north_rule).
+
+        Scale shape: every centrality is 2 shuffles/iteration on 8-byte
+        keys (operators/graph.py), amortized over rank_refresh_every
+        rounds; the rank and due-ness joins are id-keyed; nothing
+        touches html/text."""
+        io = self.io
+        ranks = self._ranks_at_basis(
+            rnd.id - (rnd.id % self.rank_refresh_every))
+        if ranks is not None:
+            allowed = (allowed.join(
+                ranks.select(F.col("id").alias("url_hash"), "rank_fp"),
+                "url_hash", "left")
+                .withColumn("rank_fp", F.coalesce(
+                    F.col("rank_fp"), F.lit(0).cast("long"))))
+        else:
+            allowed = allowed.withColumn("rank_fp", F.lit(0).cast("long"))
+        if io.exists("fetch_history"):
+            # SAME backoff clock as schedule_revisits, or the fetch order
+            # diverges from the schedule it claims to compose
+            rev = FR.revisit_schedule(io.read("fetch_history"))
+            allowed = allowed.join(
+                rev.select(F.col("page_id").alias("url_hash"),
+                           F.col("next_interval_hours").alias("_due_h")),
+                "url_hash", "left")
+        else:
+            allowed = allowed.withColumn("_due_h",
+                                         F.lit(None).cast("long"))
+        allowed = (allowed
+                   .withColumn("never_fetched", F.col("_due_h").isNull())
+                   .withColumn("due_h", F.coalesce(
+                       F.col("_due_h"), F.lit(0).cast("long")))
+                   .drop("_due_h"))
+        order = [F.desc("never_fetched"), F.asc("due_h"),
+                 F.desc("rank_fp")] + FR.order_exprs(None)
+        return (self._select(rnd, allowed, order)
+                .drop("never_fetched", "due_h", "rank_fp"))
+
+    def _transient_failures(self, rnd, fetched):
+        """fetched (retry_failed): the transient-failure seam, a pure
+        function of (url_hash, attempt), so attempt n and attempt n+1 are
+        independent deterministic draws (~12.5% fail) and replay/repeat
+        runs reproduce the identical outcome. A failed fetch carries no
+        html into the later stages. A real fetcher deletes this stage and
+        reports actual fetch_ok."""
+        transient = F.pmod(F.xxhash64("url_hash", "attempt"), F.lit(8)) == 0
+        return (fetched.withColumn("fetch_ok", F.col("fetch_ok") & ~transient)
+                .withColumn("html", F.when(F.col("fetch_ok"), F.col("html"))))
+
+    def _directives(self, rnd, fetched):
+        """fetched (honor_directives): the page's robots meta tag as
+        ``noindex`` / ``nofollow`` columns."""
+        noindex, nofollow = FR.meta_robots_flags(F.col("html").cast("string"))
+        return (fetched.withColumn("noindex", noindex)
+                .withColumn("nofollow", nofollow))
+
+    def _harvest_links(self, rnd, fetched, *, nofollow):
+        """fetched (discovery and the rank modes): out-links harvested from
+        html before extraction drops the binary column (links travel as a
+        small array column, never the blob). A page where ``nofollow``
+        holds contributes no links."""
+        return fetched.withColumn(
+            "links", F.when(nofollow, F.array().cast("array<string>"))
+            .otherwise(extract_links_udf(F.col("html"), F.col("url"))))
+
+    def _extract(self, rnd, fetched):
+        """extract and lang: vectorized extraction + deterministic language
+        tagging (failed extractions tag 'und'), projected to the pages
+        columns — the fixed ones, then those the fetched stages added."""
+        cleaned = with_clean_text(fetched, output_format="txt")
+        return (cleaned
+                .withColumn("lang", F.when(F.col("ok"),
+                                           lang_id_udf(F.col("text")))
+                            .otherwise(F.lit("und")))
+                .withColumn("round", F.lit(rnd.id))
+                .withColumn("partition_id", F.spark_partition_id())
+                .select(*PAGE_COLS,
+                        *[c for c in STAGE_PAGE_COLS if c in cleaned.columns]))
+
+    def _c4(self, rnd, pages):
+        """extracted (c4_filter): the C4 line-quality verdict ``c4_kept``."""
+        from ..operators.textstats import c4_kept_col
+        return pages.withColumn(
+            "c4_kept", F.col("ok") & c4_kept_col(
+                F.col("text"), min_words_per_line=C4_MIN_WORDS,
+                min_sentences=self.c4_min_sentences))
+
+    def _near_dups(self, rnd, pages):
+        """extracted (dedup_index): probe this round's batch against the
+        signature index and flag near-dups (kept in the pages sink for
+        audit; excluded from the index and from the corpus view). Probe
+        cost scales with the batch — the index text is consulted only for
+        candidate docs (minhash_lsh_probe_index's left_semi verify). The
+        index's gap repair is kept on ``rnd`` for the sig_index commit."""
+        # localCheckpoint, not persist: the probe + flag + every commit
+        # re-enter this frame, and a plain persist caches the DATA but not
+        # the analyzed plan — each consumer would re-analyze the whole
+        # round lineage (seen anti-join + rank join + windows + Arrow
+        # stages; measured ~+10 s/round of pure driver time at a 2.6k-url
+        # demo round). The frame is batch-sized and html is already
+        # dropped, so truncating it to an RDD scan is cheap and every
+        # consumer plans in O(1) of the round plan. (Same medicine as the
+        # round-4 minhash_lsh_probe_index fix — see BASELINE.md.)
+        pages = pages.localCheckpoint(eager=True)
+        index_bands, rnd.sig_repair = self._sig_state()
+        if index_bands is None:
+            return pages.withColumn("near_dup", F.lit(False))
+        # corpus-excluded pages (c4-dropped, noindexed) never enter the
+        # corpus — skip their probe; the in-flight batch has no near_dup
+        # column yet, which _corpus_view tolerates
+        new_docs = self._corpus_view(pages).select("url_hash", "text")
+        index_docs = self._corpus_view(self.io.read("pages"))
+        pairs = D.minhash_lsh_probe_index(
+            index_bands, index_docs.select("url_hash", "text"), new_docs,
+            id_col="url_hash", text_col="text", k=self._sig_k,
+            n_hashes=self._sig_hashes, band_size=self._sig_band,
+            threshold=DEDUP_THRESHOLD)
+        dup_ids = (pairs.select(F.col("id_b").alias("url_hash"))
+                   .distinct().withColumn("_nd", F.lit(True)))
+        return (pages.join(dup_ids, "url_hash", "left")
+                .withColumn("near_dup",
+                            F.coalesce(F.col("_nd"), F.lit(False)))
+                .drop("_nd"))
+
+    # -- commits ----------------------------------------------------------------
+    def _round_outputs(self, rnd, pages, st) -> dict:
+        """The round's commit set as {table: zero-argument builder}: pages,
+        url_seen, frontier and crawl_log, plus each commit stage's tables.
+        run_round calls a builder right before its commit, so it reads the
+        tables committed before it, and a guarded-off table costs
+        nothing."""
+        # `done` is the membership set url_seen and the frontier advance
+        # key on: every fetched url, unless a done stage keeps some back
+        done = _chain(st.done, pages, rnd)
+
+        @functools.cache
+        def frontier():
+            # frontier advance: only DONE urls leave the pending set, then
+            # the grow stages add to it
+            rem = rnd.pending.join(done.select("canonical_url"),
+                                   "canonical_url", "left_anti")
+            return _chain(st.grow, rem, rnd, pages)
+
+        out = {
+            "pages": lambda: pages,
+            "url_seen": lambda: done.select(
+                "url_hash", "canonical_url",
+                F.lit(rnd.id).cast("int").alias("first_seen_round")),
+            "frontier": frontier,
+            # K3: per-partition lineage/metrics (manifest analog) — the
+            # resume marker
+            "crawl_log": lambda: (
+                pages.groupBy("round", "partition_id")
+                .agg(F.count("*").alias("n_urls"),
+                     F.sum(F.col("ok").cast("int")).alias("n_ok"),
+                     F.sum((~F.col("ok")).cast("int")).alias("n_err"),
+                     F.sum("extracted_chars").alias("extracted_chars"))
+                .withColumn("wall_ts", F.lit(time.time()).cast("double"))),
+        }
+        for stage in st.commits:
+            out.update(stage(rnd, pages, out))
+        return out
+
+    def _retry_done(self, rnd, pages):
+        """done (retry_failed): a transiently-failed url with attempts left
+        is NOT done — it stays out of url_seen (and in the frontier) until
+        it succeeds or exhausts MAX_ATTEMPTS."""
+        return pages.filter(F.col("fetch_ok")
+                            | (F.col("attempt") + 1 >= F.lit(MAX_ATTEMPTS)))
+
+    def _discovered(self, rnd, pages, rem):
+        """grow (discover_links): harvested links − (already seen ∪ already
+        pending). Deterministic: fixed discovery priority, discovered_ts =
+        this round's id as seconds — same inputs always yield the same
+        frontier state."""
+        discovered = (pages
+                      .select(F.explode("links").alias("url"))
+                      .distinct()
+                      .withColumn("priority",
+                                  F.lit(DISCOVERY_PRIORITY).cast("int"))
+                      .withColumn(
+                          "discovered_ts",
+                          F.to_timestamp(F.lit("2026-06-01"))
+                          + F.make_interval(secs=F.lit(rnd.id))))
+        fresh = self._ingest(discovered)
+        # built AFTER the url_seen commit (frontier follows url_seen in
+        # ROUND_COMMITS) so this round's done urls are excluded
+        # (TableIO.read pins the snapshot)
+        known_seen = self.io.read("url_seen").select("canonical_url")
+        fresh = (fresh
+                 .join(known_seen, "canonical_url", "left_anti")
+                 .join(rem.select("canonical_url"),
+                       "canonical_url", "left_anti"))
+        return rem.unionByName(fresh)
+
+    def _retries(self, rnd, pages, out):
+        """commit (retry_failed): retries' = (old − urls fetched this
+        round) ∪ next attempts, kept ONLY for urls still in the frontier.
+        Idempotent on replay: next ⊆ this round's urls, so re-deriving
+        from the post-crash table lands on the same rows. Backoff is
+        exponential in attempts consumed: due = round +
+        backoff·2^attempt. The frontier semi-join purges orphans — a
+        retryable url later dropped from the frontier (trap-variant cap)
+        would otherwise hold a retries row forever and pin run()'s
+        idle-forward loop at max_rounds."""
+        def merged():
+            nxt = (pages.filter(~F.col("fetch_ok"))
+                   .filter(F.col("attempt") + 1 < F.lit(MAX_ATTEMPTS))
+                   .select(
+                       "url_hash",
+                       (F.col("attempt") + 1).cast("int").alias("attempt"),
+                       (F.lit(rnd.id)
+                        + F.lit(RETRY_BACKOFF_ROUNDS)
+                        * F.expr("shiftleft(1, attempt)"))
+                       .cast("int").alias("due_round")))
+            return (rnd.retries
+                    .join(pages.select("url_hash"), "url_hash", "left_anti")
+                    .unionByName(nxt)
+                    .join(out["frontier"]().select("url_hash"),
+                          "url_hash", "left_semi"))
+        return {"retries": merged}
+
+    def _link_graph(self, rnd, pages, out):
+        """commit (rank modes): grow the committed link graph — (fetching
+        page → link target) as 8-byte hash edges, distinct per round. The
+        NEXT round's _ranked_select ranks over it."""
+        def edges():
+            from .queries import _canonicalize
+            harvested = (pages.filter("fetch_ok")
+                         .select(F.col("url_hash").alias("src_hash"),
+                                 F.explode("links").alias("url")))
+            return (_canonicalize(harvested)
+                    .select("src_hash",
+                            F.xxhash64("canonical_url").alias("dst_hash"))
+                    .distinct()
+                    .withColumn("round", F.lit(rnd.id).cast("int")))
+        return {"links": edges}
+
+    def _sig_index(self, rnd, pages, out):
+        """commit (dedup_index): band ONLY this round's kept docs and
+        APPEND (operators/dedup.append_to_signature_index semantics —
+        near-dups never enter the index, the corpus is never
+        re-shingled); committed AFTER pages with the same round id so a
+        crash between the two commits is detected as a round-id gap and
+        repaired by _sig_state."""
+        def bands():
+            if rnd.replay:
+                # _sig_state's gap repair already covers this (committed)
+                # round's kept docs — banding them again here would
+                # duplicate index rows
+                return self._sig_state()[1]
+                # fan the batch out before shingling: AQE coalesces the small
+            # round frame to ~1 partition (the checkpointed RDD inherits
+            # it), and the minhash CPU would run on one core otherwise —
+            # measured 33 s → ~3 s on the 7k-url demo round (same fix as
+            # q_dedup_incremental's index build, plans/queries.py)
+            par = self.spark.sparkContext.defaultParallelism
+            kept_new = (self._corpus_view(pages).select("url_hash", "text")
+                        .repartition(par, F.col("url_hash")))
+            new = D.banded_signatures(
+                kept_new, "url_hash", "text", k=self._sig_k,
+                n_hashes=self._sig_hashes, band_size=self._sig_band)
+            return (new if rnd.sig_repair is None
+                    else rnd.sig_repair.unionByName(new))
+        return {"sig_index": bands}
+
+    def _archive(self, rnd, pages, out, plan=None):
+        """commit (archive): the round's WARC + WET segment blobs (see
+        _build_segments)."""
+        return {"warc_segments": lambda: self._build_segments(
+            pages, rnd.id, plan)}
+
+    def _deduped_archive(self, rnd, pages, out):
+        """commit (archive_dedup): the segments with revisit stubs, plus
+        the digests this round elects. Both derive from archive_digests
+        rounds < round_id, so BOTH commits replay identically no matter
+        where a crash landed between them."""
+        plan, new_digests = self._archive_plan(pages, rnd.id)
+        return {**self._archive(rnd, pages, out, plan),
+                "archive_digests": lambda: new_digests}
+
+    def _fetch_history(self, rnd, pages, out):
+        """commit (revisit): the round's per-fetch change observations."""
+        return {"fetch_history": lambda: self._build_fetch_history(
+            pages, rnd.id)}
 
     def run(self, *, max_rounds: int = 100,
             refresh_cycles: int = 0) -> list[dict]:

@@ -4,6 +4,7 @@ URL-seen set from the last committed checkpoint).
 """
 
 import datetime as dt
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,7 @@ from python_web_scraper_cleaner_spark.plans.crawl import (
 from python_web_scraper_cleaner_spark.plans.crawl import (
     simulated_fetch as simulated_fetch_real)
 from python_web_scraper_cleaner_spark.sources.pages import pages_local
+from python_web_scraper_cleaner_spark.sources.tableio import TableIO
 
 N_SEEDS = 200
 BUDGET = 25
@@ -1989,3 +1991,78 @@ def test_robots_failure_policy_elects_newest_cache_generation(spark):
     assert r.disallow_prefixes == ["/new/"]
     assert r.allow_prefixes == ["/new/ok/"]
     assert r.crawl_delay_ms == 777
+
+
+def test_all_round_policies_crash_after_pages_commit_heals(spark, tmp_path):
+    """Every round policy at once, crashed right after round 1's pages
+    commit (the WAL record) with every other table rolled back to round
+    0. The policies feed each other inside one round — a transient
+    failure blanks html before the directive and link stages read it,
+    c4/noindex verdicts gate the signature index, the trap cap and the
+    retry gate shape the batch that priority orders — so resume must
+    land on the uninterrupted run's crawl order, seen set and every
+    committed table (wall_ts excluded)."""
+    rows = [(r["url"], i % 10, r["warc_ts"])
+            for i, r in enumerate(pages_local(30))]
+    ts = dt.datetime(2026, 1, 1)
+    rows += [("https://host1.example/news/3.html?utm_source=x", 0, ts),
+             ("https://host2.example/casino/bonus.html", 0, ts)]
+    rows += [(f"https://host2.example/calendar.html?d={d}", 1, ts)
+             for d in range(4)]
+    seeds = spark.createDataFrame(
+        rows, "url string, priority int, discovered_ts timestamp")
+    kw = dict(per_host_budget=3, discover_links=True,
+              priority_mode="pagerank", dedup_index=True, archive=True,
+              archive_dedup=True, revisit=True, trap_variant_cap=2,
+              adaptive_delay=True, round_ms=4000, retry_failed=True,
+              url_filter=True, strip_tracking=True, c4_filter=True,
+              honor_directives=True)
+
+    def mk(root):
+        e = CrawlEngine(spark, str(root), **kw)
+        e.bootstrap(seeds, make_robots(spark))
+        return e
+
+    # the crashed store is a copy of the full run's store taken after
+    # round 1, so the two runs share rounds 0 and 1 and differ only by
+    # the crash
+    full = mk(tmp_path / "full")
+    trap_dropped = full.run_round(0)["n_trap_dropped"]
+    full_stats = [full.run_round(1)]
+    shutil.copytree(tmp_path / "full", tmp_path / "c")
+    full_stats += full.run(max_rounds=1)
+    crashed = TableIO(spark, str(tmp_path / "c"))
+    for t in ("warc_segments", "archive_digests", "sig_index", "links",
+              "url_seen", "retries", "fetch_history", "frontier",
+              "crawl_log"):
+        _rollback_to_round(crashed, t, 0)
+    resumed = CrawlEngine(spark, str(tmp_path / "c"), **kw)
+    assert resumed.last_round() == 0
+    resumed_stats = resumed.run(max_rounds=2)
+
+    # the fixture makes every interaction fire
+    assert [s["round"] for s in full_stats] == [1, 2]
+    assert trap_dropped > 0
+    assert sum(s["n_noindex"] + s["n_nofollow"] for s in full_stats) > 0
+    assert full.io.read("retries").count() > 0
+    assert resumed_stats == full_stats
+    assert resumed.crawl_order() == full.crawl_order()
+    assert resumed.seen_set() == full.seen_set()
+
+    def rows_of(eng, name):
+        df = eng.io.read(name)
+        return sorted(map(repr, df.drop("wall_ts").collect()))
+
+    from python_web_scraper_cleaner_spark.plans.crawl import ROUND_COMMITS
+    for name, _mode in ROUND_COMMITS:
+        assert full.io.exists(name), name
+        assert rows_of(resumed, name) == rows_of(full, name), name
+
+
+@pytest.mark.parametrize("kw", [dict(per_host_budget=0), dict(n_salts=0)])
+def test_engine_rejects_counts_that_crawl_nothing(spark, tmp_path, kw):
+    """A zero budget selects no url, and zero salts reach pmod(hash, 0):
+    either way run() would stop after one empty round with the whole
+    frontier pending. The constructor refuses both."""
+    with pytest.raises(ValueError, match=next(iter(kw))):
+        CrawlEngine(spark, str(tmp_path / "e"), **kw)
