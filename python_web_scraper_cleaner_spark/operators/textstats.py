@@ -487,13 +487,12 @@ def dsir_weights(docs: DataFrame, target_model: DataFrame,
     left so out-of-vocab trigrams count as zero mass; the single
     doc-keyed exchange aggregates both hit masses together (vs 2x
     lm_familiarity, which would pay the explode + exchange twice). The
-    two model totals are 1-row aggregates, cross-joined broadcast. The
-    keep decision never shuffles — it is a filter of the output."""
+    two model totals are scalar subqueries over the models (no nested
+    loop join). The keep decision never shuffles — it is a filter of the
+    output."""
     from .sampling import _hash_bp
-    n_t = F.broadcast(target_model.agg(
-        F.sum("n").cast("long").alias("nt_total")))
-    n_b = F.broadcast(background_model.agg(
-        F.sum("n").cast("long").alias("nb_total")))
+    nt_total = target_model.agg(F.sum("n").cast("long")).scalar()
+    nb_total = background_model.agg(F.sum("n").cast("long")).scalar()
     tri = docs.select(F.col(id_col).alias("id"),
                       F.explode_outer(char_trigrams(F.col(text_col)))
                       .alias("trigram"))
@@ -510,7 +509,8 @@ def dsir_weights(docs: DataFrame, target_model: DataFrame,
                    .cast("long").alias("mass_t"),
                    F.sum(F.coalesce(F.col("_n_b"), F.lit(0)))
                    .cast("long").alias("mass_b")))
-    fam = (scored.crossJoin(n_t).crossJoin(n_b)
+    fam = (scored.withColumn("nt_total", nt_total)
+           .withColumn("nb_total", nb_total)
            .withColumn(
                "fam_target_fp",
                F.when(F.col("n_trigrams") == 0, F.lit(0).cast("long"))

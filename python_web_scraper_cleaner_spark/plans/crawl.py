@@ -21,7 +21,9 @@ html_cleaner_core.py:run_batch), re-expressed as north_rule demands:
       ──► near-dup probe vs the persisted MinHash signature index (optional,
       dedup_index=True: batch band-probes sig_index, near-dups flagged,
       only kept docs' bands appended — corpus never re-shingled)
-    transactional commits, in ROUND_COMMITS order: pages+r,
+    transactional commits (TableIO.commit_round: the tables' data
+      writes run at once, then their snapshots publish one by one in
+      ROUND_COMMITS order, the order a crash leaves a prefix of): pages+r,
       warc_segments+r (optional, archive=True: WARC capture + WET
       extracted-text twins — the pair of files Common Crawl ships;
       archive_dedup=True additionally maintains archive_digests+r and
@@ -43,6 +45,8 @@ Every table commit is one TableIO snapshot per round, so a killed job
 resumes at the last committed round and — because every ordering derives
 from explicit sort keys — replays the exact same crawl order and URL-seen
 set (north_rule checkpoint/resume; tests/test_crawl_engine.py proves it).
+No commit builder reads a table its own round commits, which is what lets
+the writes overlap without changing a committed byte.
 
 In this sandbox the fetch stage regenerates the deterministic synthetic
 HTML (sources/pages.page_record) instead of hitting the network — the
@@ -264,15 +268,19 @@ def _chain(stages, df: DataFrame, *args) -> DataFrame:
 class RoundContext:
     """What one round's stages share: its id, the pending frontier (as
     the gate stages leave it), whether the round replays its committed
-    pages, the committed retry state (read once, on first use), and the
-    signature-index gap repair the near-dup stage computes for the
-    sig_index commit."""
+    pages, the committed url_seen and retry state (each read once, on
+    first use), and the signature-index gap repair the near-dup stage
+    computes for the sig_index commit."""
 
     def __init__(self, io: TableIO, round_id: int, pending: DataFrame,
                  replay: bool) -> None:
         self.io, self.id, self.pending, self.replay = (
             io, round_id, pending, replay)
         self.sig_repair: DataFrame | None = None
+
+    @functools.cached_property
+    def seen(self) -> DataFrame:
+        return self.io.read_or_empty("url_seen", SEEN_SCHEMA)
 
     @functools.cached_property
     def retries(self) -> DataFrame:
@@ -295,7 +303,7 @@ class RoundStages:
     extracted: list = _stage_list()   # after extract and lang
     stats: list = _stage_list()       # count columns over the round frame
     done: list = _stage_list()        # pages → the urls the round finished
-    grow: list = _stage_list()        # (rnd, pages, frontier) → frontier
+    grow: list = _stage_list()        # (rnd, pages, done, rem) → frontier
     commits: list = _stage_list()     # (rnd, pages, out) → {table: builder}
 
 
@@ -562,13 +570,15 @@ class CrawlEngine:
                      else seeds.select("url", "priority", "discovered_ts")
                      .unionByName(doc_seeds))
         frontier = self._ingest(seeds)
-        self.io.overwrite(frontier, "frontier", round_id=-1)
-        self.io.overwrite(robots, "robots", round_id=-1)
-        # the vetted seed identity, durable: trustrank teleports to this
-        # set (committed unconditionally — tiny, and it lets any store
-        # switch into trustrank mode later without re-bootstrapping)
-        self.io.overwrite(frontier.select("url_hash").distinct(),
-                          "seed_set", round_id=-1)
+        self.io.commit_round(-1, [
+            ("frontier", "overwrite", lambda: frontier),
+            ("robots", "overwrite", lambda: robots),
+            # the vetted seed identity, durable: trustrank teleports to
+            # this set (committed unconditionally — tiny, and it lets any
+            # store switch into trustrank mode later without
+            # re-bootstrapping)
+            ("seed_set", "overwrite",
+             lambda: frontier.select("url_hash").distinct())])
 
     def last_round(self) -> int:
         r = self.io.latest_round("crawl_log")
@@ -916,12 +926,12 @@ class CrawlEngine:
                        F.min("warc_ts").alias("warc_ts"),
                        F.min("url_hash").alias("url_hash"))
                   .select(*[f.name for f in FRONTIER_SCHEMA]))
-        io.overwrite(merged, "frontier", round_id)
-        # the reads below resolved their snapshot dirs BEFORE the
-        # overwrites above (TableIO.read pins dirs eagerly), so the
-        # lineage stays on the pre-transition versions
+        # every frame reads its table before the commit below (TableIO.
+        # read pins the snapshot's dirs), so the lineage stays on the
+        # pre-transition versions
         compacted = io.read("url_seen").join(due, "url_hash", "left_anti")
-        io.overwrite(compacted, "url_seen", round_id)
+        writes = [("frontier", "overwrite", lambda: merged),
+                  ("url_seen", "overwrite", lambda: compacted)]
         if not self._committed("crawl_log", round_id):
             # partition_id = -1 marks the revisit-transition row; it
             # advances last_round() so resume lands after the transition
@@ -933,7 +943,8 @@ class CrawlEngine:
                 F.lit(0).cast("long").alias("n_err"),
                 F.lit(0).cast("long").alias("extracted_chars"),
                 F.lit(time.time()).cast("double").alias("wall_ts"))
-            io.append_round(marker, "crawl_log", round_id)
+            writes.append(("crawl_log", "append", lambda: marker))
+        io.commit_round(round_id, writes)
         return n_due
 
     def _committed(self, name: str, round_id: int) -> bool:
@@ -1011,14 +1022,15 @@ class CrawlEngine:
         # (north_rule; tests/test_crawl_engine.py crash-window tests).
         pages = (io.read("pages").filter(F.col("round") == round_id)
                  if rnd.replay else self._fetch_round(rnd, st))
-        # one shuffle-free pass feeds the commits: cache the round result.
-        # persist (NOT localCheckpoint) is deliberate here: the commit
-        # consumers re-plan the round lineage, but with the static plan
-        # that analysis is cheap, while a checkpointed RDD loses the
-        # columnar cache + codegen scan and freezes the AQE-coalesced
-        # partitioning — measured 4.4 s → 9.1 s on the 26k-url round.
-        # The near-dup stage checkpoints instead because its probe
-        # re-enters a much deeper plan (see _near_dups).
+        # one shuffle-free pass feeds the commits: cache the round result,
+        # which every commit builder reads, the builders all at once
+        # (TableIO.commit_round). persist (NOT localCheckpoint) is
+        # deliberate here: each builder re-plans the round lineage, but
+        # with the static plan that analysis is cheap, while a
+        # checkpointed RDD loses the columnar cache + codegen scan and
+        # freezes the AQE-coalesced partitioning — measured 4.4 s → 9.1 s
+        # on the 26k-url round. The near-dup stage checkpoints instead
+        # because its probe re-enters a much deeper plan (see _near_dups).
         pages.persist()
         try:
             # every per-page count in one aggregate — the first action,
@@ -1026,12 +1038,10 @@ class CrawlEngine:
             counts = pages.agg(F.count("*").alias("n_fetched"),
                                *st.stats).first().asDict()
             outputs = self._round_outputs(rnd, pages, st)
-            for name, mode in ROUND_COMMITS:
-                if name not in outputs or (
-                        mode == "append" and self._committed(name, round_id)):
-                    continue
-                commit = io.append_round if mode == "append" else io.overwrite
-                commit(outputs[name](), name, round_id)
+            io.commit_round(round_id, [
+                (name, mode, outputs[name]) for name, mode in ROUND_COMMITS
+                if name in outputs and not (
+                    mode == "append" and self._committed(name, round_id))])
             # count the COMMITTED frontier (parquet metadata read) instead
             # of re-running the anti-join lineage a second time
             stats = {"round": round_id, "n_fetched": counts.pop("n_fetched"),
@@ -1048,8 +1058,7 @@ class CrawlEngine:
         # J1: one exact left_anti join of the pending frontier against
         # url_seen — the only seen-url check, so it covers every way a
         # url enters the frontier (discovery, re-seeding, revisit)
-        seen = self.io.read_or_empty("url_seen", SEEN_SCHEMA)
-        fresh = rnd.pending.join(seen.select("url_hash"), "url_hash",
+        fresh = rnd.pending.join(rnd.seen.select("url_hash"), "url_hash",
                                  "left_anti")
         allowed = FR.apply_robots(_chain(st.unseen, fresh, rnd),
                                   self.io.read("robots"))
@@ -1256,9 +1265,10 @@ class CrawlEngine:
     def _round_outputs(self, rnd, pages, st) -> dict:
         """The round's commit set as {table: zero-argument builder}: pages,
         url_seen, frontier and crawl_log, plus each commit stage's tables.
-        run_round calls a builder right before its commit, so it reads the
-        tables committed before it, and a guarded-off table costs
-        nothing."""
+        TableIO.commit_round runs the builders at once, so no builder may
+        read a table this round commits: each reads the round's frames
+        and the snapshots the round started from. A guarded-off table's
+        builder never runs and costs nothing."""
         # `done` is the membership set url_seen and the frontier advance
         # key on: every fetched url, unless a done stage keeps some back
         done = _chain(st.done, pages, rnd)
@@ -1269,7 +1279,7 @@ class CrawlEngine:
             # the grow stages add to it
             rem = rnd.pending.join(done.select("canonical_url"),
                                    "canonical_url", "left_anti")
-            return _chain(st.grow, rem, rnd, pages)
+            return _chain(st.grow, rem, rnd, pages, done)
 
         out = {
             "pages": lambda: pages,
@@ -1298,7 +1308,7 @@ class CrawlEngine:
         return pages.filter(F.col("fetch_ok")
                             | (F.col("attempt") + 1 >= F.lit(MAX_ATTEMPTS)))
 
-    def _discovered(self, rnd, pages, rem):
+    def _discovered(self, rnd, pages, done, rem):
         """grow (discover_links): harvested links − (already seen ∪ already
         pending). Deterministic: fixed discovery priority, discovered_ts =
         this round's id as seconds — same inputs always yield the same
@@ -1313,10 +1323,13 @@ class CrawlEngine:
                           F.to_timestamp(F.lit("2026-06-01"))
                           + F.make_interval(secs=F.lit(rnd.id))))
         fresh = self._ingest(discovered)
-        # built AFTER the url_seen commit (frontier follows url_seen in
-        # ROUND_COMMITS) so this round's done urls are excluded
-        # (TableIO.read pins the snapshot)
-        known_seen = self.io.read("url_seen").select("canonical_url")
+        # seen = the url_seen snapshot the round read ∪ this round's done
+        # urls, never this round's url_seen commit (the frontier builds
+        # while url_seen is written). A replayed round may read url_seen
+        # before or after its round commit; with done added the set is
+        # the same either way
+        known_seen = (rnd.seen.select("canonical_url")
+                      .unionByName(done.select("canonical_url")))
         fresh = (fresh
                  .join(known_seen, "canonical_url", "left_anti")
                  .join(rem.select("canonical_url"),

@@ -9,24 +9,46 @@ committed snapshots. A killed job therefore resumes from the last committed
 round with an identical view — the checkpoint/resume guarantee the
 north_rule requires.
 
+A commit has Iceberg's two steps: ``stage`` writes the data files to a
+fresh dir no manifest references yet, ``publish`` makes them visible with
+one atomic manifest advance. ``commit_round`` commits a round's tables:
+their data writes overlap on a thread pool, their snapshots publish in
+the caller's order. A failed commit leaves only unreferenced dirs behind,
+which ``vacuum`` reclaims.
+
 Layout per table:
     <root>/<name>/data/<round_tag>-<uuid>/part-*.parquet
-    <root>/<name>/snap-00001.json   {"snapshot": 1, "round": 0, "dirs": [...]}
+    <root>/<name>/snap-00001.json   {"snapshot": 1, "round": 0,
+                                     "dirs": [...], "schema": "<id>"}
+    <root>/<name>/schema-<id>.json  Spark schema JSON, id = its digest
     <root>/<name>/LATEST            "00001"
 
+A snapshot names the table's schema by id, and a read passes that schema
+to Spark, so it needs no inference job. Each distinct schema is stored
+once per table, as Iceberg's table metadata keeps its schemas and each
+snapshot refers to one by id. A manifest written before the field existed
+is read with inference.
+
 When an Iceberg catalog is available, swap TableIO for the real thing —
-the engine only uses this narrow interface (read / append_round / rollback
-/ latest_round, plus read_at time travel and vacuum = Iceberg's
-VERSION AS OF and expire_snapshots).
+the engine only uses this narrow interface (read / commit_round, with
+append_round / overwrite its one-table case / rollback / latest_round,
+plus read_at time travel and vacuum = Iceberg's VERSION AS OF and
+expire_snapshots; commit_round is Iceberg writing a round's data files,
+then committing each table).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 
 class TableIO:
@@ -87,33 +109,98 @@ class TableIO:
         snap = self._latest_snapshot(name)
         return None if snap is None else snap.get("round")
 
-    def append_round(self, df: DataFrame, name: str, round_id: int) -> None:
-        """Append df as one transactional commit tagged with round_id.
-        Data lands in a fresh uuid dir first; the snapshot referencing it is
-        written only after the parquet write fully succeeds."""
+    def stage(self, df: DataFrame, name: str, round_id: int) -> dict:
+        """Write df to a fresh uuid data dir that no manifest references
+        (Iceberg's data-file write). Returns what ``publish`` commits;
+        until then the dir is invisible to readers, and if it is never
+        published ``vacuum`` removes it."""
         ddir = os.path.join(self._tdir(name), "data",
                             f"r{round_id:06d}-{uuid.uuid4().hex[:8]}")
         df.write.mode("overwrite").parquet(ddir)
+        return {"dir": os.path.relpath(ddir, self._tdir(name)),
+                "schema": df.schema.json()}
+
+    def _put_schema(self, name: str, schema_json: str) -> str:
+        """Store a schema once per table under its digest; returns the id
+        a manifest records."""
+        schema_id = hashlib.sha1(schema_json.encode()).hexdigest()[:12]
+        path = os.path.join(self._tdir(name), f"schema-{schema_id}.json")
+        if not os.path.exists(path):
+            os.makedirs(self._tdir(name), exist_ok=True)
+            tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                f.write(schema_json)
+            os.replace(tmp, path)
+        return schema_id
+
+    def publish(self, name: str, mode: str, round_id: int,
+                staged: dict) -> None:
+        """Make a staged dir visible: one atomic snapshot tagged with
+        round_id. ``append`` adds it to the latest snapshot's dirs;
+        ``overwrite`` replaces them (old dirs stay readable through
+        read_at until vacuum). An append keeps the schema the table's
+        first commit recorded. That is the schema inference picks (the
+        first file in path order, and round tags sort the first commit
+        first), so old dirs read as before when a later round adds a
+        column."""
         prev = self._latest_snapshot(name)
-        dirs = list(prev["dirs"]) if prev else []
-        dirs.append(os.path.relpath(ddir, self._tdir(name)))
-        self._commit(name, {"round": round_id, "dirs": dirs})
+        if mode == "append" and prev is not None:
+            dirs, schema_id = prev["dirs"], prev.get("schema")
+        else:
+            dirs, schema_id = [], self._put_schema(name, staged["schema"])
+        self._commit(name, {"round": round_id, "dirs": dirs + [staged["dir"]],
+                            "schema": schema_id})
+
+    def commit_round(self, round_id: int,
+                     writes: list[tuple[str, str, Callable]]) -> None:
+        """Commit one round's tables. ``writes`` is an ordered list of
+        (name, mode, build): every ``build()`` and the parquet write of
+        the frame it returns run at once, one thread per entry; the
+        snapshots then publish on this thread in list order. On the first
+        failure in that order, publishing stops: the error is re-raised
+        once every write has ended, the earlier tables are at their new
+        snapshot, the later ones at their old one, and the later tables'
+        staged dirs are left unreferenced for vacuum. Readers see only
+        manifests, so a crash leaves exactly a prefix of the list
+        committed, as the serial loop did."""
+        def write(name: str, build: Callable) -> dict:
+            return self.stage(build(), name, round_id)
+
+        if not writes:
+            return
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            staged = [pool.submit(inheritable_thread_target(self.spark)(write),
+                                  name, build)
+                      for name, _, build in writes]
+            # leaving the block joins every write, also when result()
+            # raises
+            for (name, mode, _), fut in zip(writes, staged):
+                self.publish(name, mode, round_id, fut.result())
+
+    def append_round(self, df: DataFrame, name: str, round_id: int) -> None:
+        """Append df as one transactional commit tagged with round_id."""
+        self.commit_round(round_id, [(name, "append", lambda: df)])
 
     def overwrite(self, df: DataFrame, name: str, round_id: int) -> None:
         """Replace table contents in one commit (old data dirs are simply
         no longer referenced — time travel to them stays possible)."""
-        ddir = os.path.join(self._tdir(name), "data",
-                            f"r{round_id:06d}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(ddir)
-        self._commit(name, {"round": round_id,
-                            "dirs": [os.path.relpath(ddir, self._tdir(name))]})
+        self.commit_round(round_id, [(name, "overwrite", lambda: df)])
+
+    def _read_snapshot(self, name: str, snap: dict) -> DataFrame:
+        """The snapshot's dirs, read with its recorded schema (no
+        inference job), or inferred when the manifest predates it."""
+        td = self._tdir(name)
+        reader = self.spark.read
+        if snap.get("schema") is not None:
+            with open(os.path.join(td, f"schema-{snap['schema']}.json")) as f:
+                reader = reader.schema(T.StructType.fromJson(json.load(f)))
+        return reader.parquet(*[os.path.join(td, d) for d in snap["dirs"]])
 
     def read(self, name: str) -> DataFrame:
         snap = self._latest_snapshot(name)
         if snap is None or not snap["dirs"]:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
-        paths = [os.path.join(self._tdir(name), d) for d in snap["dirs"]]
-        return self.spark.read.parquet(*paths)
+        return self._read_snapshot(name, snap)
 
     def read_or_empty(self, name: str, schema) -> DataFrame:
         snap = self._latest_snapshot(name)
@@ -133,8 +220,7 @@ class TableIO:
             snap = json.load(f)
         if not snap["dirs"]:
             raise FileNotFoundError(f"snapshot {snapshot} of {name} is empty")
-        return self.spark.read.parquet(
-            *[os.path.join(td, d) for d in snap["dirs"]])
+        return self._read_snapshot(name, snap)
 
     def snapshots(self, name: str) -> list[dict]:
         """All committed snapshot manifests, oldest first. A torn snap
@@ -174,7 +260,8 @@ class TableIO:
         snapshot that references deleted data. A kept snapshot at or
         below LATEST that cannot be read raises before anything is
         deleted: its data dirs are unknown, so no dir is provably
-        unreferenced."""
+        unreferenced. Schema files stay: one small file per distinct
+        schema the table ever had."""
         import shutil
 
         td = self._tdir(name)

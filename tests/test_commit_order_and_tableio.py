@@ -2,11 +2,17 @@
 review: the resume marker (crawl_log) must commit LAST so every crash
 window replays; retries rows may never outlive their frontier url;
 TableIO must survive torn snapshot files and >5-digit snapshot ids.
+TableIO.commit_round overlaps a round's writes but publishes in list
+order, so a failed write leaves exactly a prefix of the round committed.
 """
 
+import contextlib
 import json
 import os
+import shutil
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_web_scraper_cleaner_spark.plans.crawl import CrawlEngine
@@ -239,3 +245,192 @@ def test_tableio_snapshot_order_is_numeric_past_5_digits(spark, tmp_path):
     io.vacuum("x", keep_last=2)
     kept = [s["snapshot"] for s in io.snapshots("x")]
     assert kept == [100000, 100001]           # newest two, NOT {99999,100001}
+
+
+def test_tableio_read_takes_the_manifest_schema(spark, tmp_path):
+    """A read passes the schema its snapshot manifest records: it launches
+    no schema-inference job and gets the schema inference would. An
+    append keeps the table's first schema, as inference does (it reads
+    the first file in path order). A manifest written before the field
+    existed still reads, with inference."""
+    io = TableIO(spark, str(tmp_path / "t"))
+    df = spark.range(4).select(
+        "id", (F.col("id") * 2).cast("int").alias("v"),
+        F.array(F.col("id").cast("string")).alias("a"))
+    io.overwrite(df, "x", 0)
+    io.append_round(df.withColumn("extra", F.lit("e")), "x", 1)
+    td = os.path.join(io.root, "x")
+    inferred = spark.read.parquet(
+        *[os.path.join(td, d) for d in io.snapshots("x")[-1]["dirs"]]).schema
+    sc = spark.sparkContext
+    sc.setJobGroup("tableio-read", "tableio-read")
+    try:
+        got, at = io.read("x"), io.read_at("x", 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("tableio-read")
+    assert got.schema == inferred and "extra" not in got.columns
+    assert at.schema == spark.read.parquet(
+        os.path.join(td, io.snapshots("x")[0]["dirs"][0])).schema
+    rows = sorted(got.collect())
+    assert len(rows) == 8
+
+    # old-format manifests: no schema field
+    for f in os.listdir(td):
+        if f.startswith("snap-"):
+            with open(os.path.join(td, f)) as fh:
+                manifest = json.load(fh)
+            del manifest["schema"]
+            with open(os.path.join(td, f), "w") as fh:
+                json.dump(manifest, fh)
+    old = io.read("x")
+    assert old.schema == inferred and sorted(old.collect()) == rows
+
+
+# ---------------------------------------------------------------------------
+# commit_round: the writes overlap, the snapshots publish in list order
+# ---------------------------------------------------------------------------
+
+
+def _record_publishes(io) -> list:
+    """Wrap ``io.publish``; returns the table names in publish order."""
+    order, publish = [], io.publish
+
+    def recorded(name, *args):
+        order.append(name)
+        return publish(name, *args)
+
+    io.publish = recorded
+    return order
+
+
+def test_commit_round_publishes_in_list_order(spark, tmp_path):
+    """Entry a's build waits until entry b's write has ended, so b's data
+    lands first; a is still published before b."""
+    io = TableIO(spark, str(tmp_path / "t"))
+    b_written, stage = threading.Event(), io.stage
+
+    def staged(df, name, round_id):
+        out = stage(df, name, round_id)
+        if name == "b":
+            b_written.set()
+        return out
+
+    io.stage = staged
+    order = _record_publishes(io)
+
+    def build_a():
+        assert b_written.wait(timeout=300)
+        return spark.range(2)
+
+    io.commit_round(0, [("a", "append", build_a),
+                        ("b", "overwrite", lambda: spark.range(3))])
+    assert order == ["a", "b"]
+    assert io.read("a").count() == 2 and io.read("b").count() == 3
+
+
+def test_commit_round_failure_publishes_only_the_prefix(spark, tmp_path):
+    """A middle entry fails: the error propagates, the entries before it
+    are at their new snapshot, the ones after it at their old one, and
+    vacuum reclaims the unreferenced dirs their writes left."""
+    io = TableIO(spark, str(tmp_path / "t"))
+    for name in ("w", "x", "y", "z"):
+        io.append_round(spark.range(1), name, 0)
+
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        io.commit_round(1, [("w", "append", lambda: spark.range(2)),
+                            ("x", "append", boom),
+                            ("y", "append", lambda: spark.range(3)),
+                            ("z", "overwrite", lambda: spark.range(4))])
+    assert io.latest_round("w") == 1 and io.read("w").count() == 3
+    for name in ("x", "y", "z"):
+        assert io.latest_round(name) == 0 and io.read(name).count() == 1
+    for name in ("y", "z"):
+        data = os.path.join(io.root, name, "data")
+        kept = io.snapshots(name)[-1]["dirs"]
+        orphans = [os.path.join("data", d) for d in sorted(os.listdir(data))
+                   if os.path.join("data", d) not in kept]
+        assert len(orphans) == 1, name       # its write ran to the end
+        assert io.vacuum(name)["removed_dirs"] == orphans
+        assert sorted(os.listdir(data)) == [os.path.basename(d)
+                                            for d in kept]
+        assert io.read(name).count() == 1
+
+
+@contextlib.contextmanager
+def _failing_write(io, table: str, n_writes: int):
+    """Test seam: the staged write of ``table`` raises, and only once the
+    round's other ``n_writes - 1`` writes have ended. It finishes last,
+    so a publish that followed completion order would publish every
+    table after it."""
+    ended, stage = threading.Semaphore(0), io.stage
+
+    def staged(df, name, round_id):
+        if name != table:
+            out = stage(df, name, round_id)
+            ended.release()
+            return out
+        for _ in range(n_writes - 1):
+            assert ended.acquire(timeout=300)
+        raise RuntimeError(f"injected failure staging {name}")
+
+    io.stage = staged
+    try:
+        yield
+    finally:
+        del io.stage
+
+
+def test_crash_at_every_staged_write_publishes_a_prefix_and_heals(
+        spark, tmp_path):
+    """Round 1 of a discovery + dedup_index + revisit crawl fails at its
+    k-th staged write, for every k. The published tables are exactly the
+    ROUND_COMMITS prefix before the failing table, and resuming lands on
+    the uninterrupted run: stats, crawl order, seen set and every table
+    (wall_ts excluded)."""
+    from python_web_scraper_cleaner_spark.plans.crawl import ROUND_COMMITS
+    from python_web_scraper_cleaner_spark.sources.pages import pages_local
+
+    seeds = spark.createDataFrame(
+        [(r["url"], i % 10, r["warc_ts"])
+         for i, r in enumerate(pages_local(24))],
+        "url string, priority int, discovered_ts timestamp")
+    robots = spark.createDataFrame(
+        [(f"host{h}.example", [], [], 0) for h in range(48)],
+        "host string, disallow_prefixes array<string>, "
+        "allow_prefixes array<string>, crawl_delay_ms long")
+    kw = dict(per_host_budget=3, discover_links=True, dedup_index=True,
+              revisit=True)
+
+    full = CrawlEngine(spark, str(tmp_path / "full"), **kw)
+    full.bootstrap(seeds, robots)
+    full.run_round(0)
+    shutil.copytree(tmp_path / "full", tmp_path / "base")
+    full_stats = [full.run_round(1)]
+    tables = [t for t, _ in ROUND_COMMITS
+              if any(s["round"] == 1 for s in full.io.snapshots(t))]
+    assert tables == ["pages", "sig_index", "url_seen", "fetch_history",
+                      "frontier", "crawl_log"]
+
+    def rows_of(eng, name):
+        return sorted(map(repr, eng.io.read(name).drop("wall_ts").collect()))
+
+    want = {t: rows_of(full, t) for t in tables}
+    for k, failing in enumerate(tables):
+        root = tmp_path / f"crash{k}"
+        shutil.copytree(tmp_path / "base", root)
+        eng = CrawlEngine(spark, str(root), **kw)
+        with _failing_write(eng.io, failing, len(tables)):
+            with pytest.raises(RuntimeError, match="injected failure"):
+                eng.run_round(1)
+        assert [t for t in tables if eng.io.latest_round(t) == 1] \
+            == tables[:k], failing
+        resumed = CrawlEngine(spark, str(root), **kw)
+        assert resumed.run(max_rounds=1) == full_stats, failing
+        assert resumed.crawl_order() == full.crawl_order(), failing
+        assert resumed.seen_set() == full.seen_set(), failing
+        for t in tables:
+            assert rows_of(resumed, t) == want[t], (failing, t)

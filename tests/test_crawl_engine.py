@@ -2001,7 +2001,8 @@ def test_all_round_policies_crash_after_pages_commit_heals(spark, tmp_path):
     c4/noindex verdicts gate the signature index, the trap cap and the
     retry gate shape the batch that priority orders — so resume must
     land on the uninterrupted run's crawl order, seen set and every
-    committed table (wall_ts excluded)."""
+    committed table (wall_ts excluded). Every table reads with the schema
+    inference would give it."""
     rows = [(r["url"], i % 10, r["warc_ts"])
             for i, r in enumerate(pages_local(30))]
     ts = dt.datetime(2026, 1, 1)
@@ -2053,10 +2054,18 @@ def test_all_round_policies_crash_after_pages_commit_heals(spark, tmp_path):
         df = eng.io.read(name)
         return sorted(map(repr, df.drop("wall_ts").collect()))
 
-    from python_web_scraper_cleaner_spark.plans.crawl import ROUND_COMMITS
+    from python_web_scraper_cleaner_spark.plans.crawl import (
+        BOOTSTRAP_TABLES, ROUND_COMMITS)
     for name, _mode in ROUND_COMMITS:
         assert full.io.exists(name), name
         assert rows_of(resumed, name) == rows_of(full, name), name
+    # a read takes the schema its manifest records: the one inference
+    # gives
+    for name in BOOTSTRAP_TABLES + tuple(t for t, _ in ROUND_COMMITS):
+        dirs = full.io.snapshots(name)[-1]["dirs"]
+        inferred = spark.read.parquet(
+            *[str(tmp_path / "full" / name / d) for d in dirs]).schema
+        assert full.io.read(name).schema == inferred, name
 
 
 @pytest.mark.parametrize("kw", [dict(per_host_budget=0), dict(n_salts=0)])
